@@ -1188,18 +1188,7 @@ def orders_value_psi_yearly(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_order_statistics machinery (range repartition + per-
     partition counts → K driver scalars → ONE filter); binning is a
     broadcast 9-way CASE over the fact scan; everything after is a
-    (year, bin) hash agg — ≤10 rows per year forever.
-
-    ``spark_graft.inplan_order_stats=true`` (optimization r15, VERDICT
-    r14 item 7) swaps the three driver collects (base-year scalar +
-    the two order-statistics collects) for the fully in-plan
-    order_statistic_values_frame: the cutpoints ride a broadcast 1-row
-    array and the bin derives from an array fold. Identical results
-    (pinned by test); the literal path stays the default — see the
-    OPTIMIZATION_r15.md A/B (the in-plan shape pays one extra
-    broadcast round-trip at bench SF and only removes ~3 constant-size
-    driver barriers, which matters on high-latency clusters, not on
-    local[N])."""
+    (year, bin) hash agg — ≤10 rows per year forever."""
     v = materialize_once(
         load_table(spark, sf_dir, "orders").select(
             F.year("o_orderdate").cast("bigint").alias("yr"),
@@ -1209,65 +1198,26 @@ def orders_value_psi_yearly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from sample_emr_on_eks_fgac_iceberg_spark.operators.skew import (
         exact_order_statistics,
-        order_statistic_values_frame,
     )
 
-    inplan = (
-        spark.conf.get("spark_graft.inplan_order_stats", "false").lower()
-        == "true"
+    base_yr = v.agg(F.min("yr")).collect()[0][0]  # scale-ok: one scalar, the base period id
+    base = v.filter(F.col("yr") == base_yr)
+    stats = exact_order_statistics(
+        base.select("v", "o_orderkey"), ["v", "o_orderkey"],
+        [(k, 10) for k in range(1, 10)],
     )
-    if inplan:
-        minyr = v.agg(F.min("yr").alias("yr0"))
-        base = v.crossJoin(F.broadcast(minyr)).filter(
-            F.col("yr") == F.col("yr0")
-        )
-        cuts_frame = order_statistic_values_frame(
-            base.select("v", "o_orderkey"),
-            ["v", "o_orderkey"],
-            "v",
-            [(k, 10) for k in range(1, 10)],
-        )
-        # 9 codegen element_at comparisons, not a higher-order-function
-        # fold (interpreted per row — the r4 lsh lesson); an index past
-        # the array (empty base) yields NULL → counts 0, matching the
-        # driver variant's empty-cuts behavior
-        bin_col = F.lit(0)
-        for i in range(1, 10):
-            bin_col = bin_col + F.when(
-                F.element_at(F.col("vals"), i) < F.col("v"), 1
-            ).otherwise(0)
-        binned = v.crossJoin(F.broadcast(cuts_frame)).select(
-            "yr", bin_col.alias("bin")
-        )
-        cnts = materialize_once(
-            binned.groupBy("yr", "bin").agg(
-                F.count(F.lit(1)).cast("bigint").alias("cnt")
-            )
-        )
-        b0 = (
-            cnts.crossJoin(F.broadcast(minyr))
-            .filter(F.col("yr") == F.col("yr0"))
-            .select("bin", F.col("cnt").alias("bcnt"))
-        )
-    else:
-        base_yr = v.agg(F.min("yr")).collect()[0][0]  # scale-ok: one scalar, the base period id
-        base = v.filter(F.col("yr") == base_yr)
-        stats = exact_order_statistics(
-            base.select("v", "o_orderkey"), ["v", "o_orderkey"],
-            [(k, 10) for k in range(1, 10)],
-        )
-        cuts = sorted(row["v"] for _, _, row in stats)
-        bin_col = F.lit(0)
-        for b in cuts:
-            bin_col = bin_col + F.when(F.lit(b) < F.col("v"), 1).otherwise(0)
-        cnts = materialize_once(
-            v.select("yr", bin_col.alias("bin"))
-            .groupBy("yr", "bin")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        )
-        b0 = cnts.filter(F.col("yr") == base_yr).select(
-            "bin", F.col("cnt").alias("bcnt")
-        )
+    cuts = sorted(row["v"] for _, _, row in stats)
+    bin_col = F.lit(0)
+    for b in cuts:
+        bin_col = bin_col + F.when(F.lit(b) < F.col("v"), 1).otherwise(0)
+    cnts = materialize_once(
+        v.select("yr", bin_col.alias("bin"))
+        .groupBy("yr", "bin")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
+    )
+    b0 = cnts.filter(F.col("yr") == base_yr).select(
+        "bin", F.col("cnt").alias("bcnt")
+    )
     yt = cnts.groupBy("yr").agg(F.sum("cnt").alias("n_yr"))
     # base-period total rides a broadcast 1-row frame off the already-
     # materialized bin counts — the previous base.count() re-scanned

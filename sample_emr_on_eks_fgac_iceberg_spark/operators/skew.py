@@ -365,92 +365,6 @@ def exact_order_statistics(
     return [(q, pos, by_pos[pos]) for q, pos in wanted]
 
 
-def order_statistic_values_frame(
-    df: DataFrame,
-    order_cols: Sequence[str],
-    value_col: str,
-    quantiles: Sequence[tuple[int, int]],
-    n_parts: int | None = None,
-) -> DataFrame:
-    """Fully IN-PLAN sibling of ``exact_order_statistics`` for
-    consumers that only need the quantile rows' VALUES (optimization
-    r15, VERDICT r14 item 7): returns a 1-row frame with ``vals`` — an
-    ascending-sorted array holding ``value_col`` of the row at global
-    position ceil(num·n/den) (floored at 1) for EACH quantile, one
-    array element per quantile (two quantiles landing on the same row
-    contribute two equal elements, exactly like the driver variant's
-    per-quantile rows). ZERO driver actions: global ranks come from a
-    per-partition row_number plus the K-row offsets+total fold, the
-    target positions ride a broadcast of the ≤|quantiles|-row position
-    frame, and the hits collapse into one array_sort(collect_list).
-    Empty input yields one row with an EMPTY array (callers' bin
-    folds see zero cutpoints, matching the driver variant's empty
-    list)."""
-    spark = df.sparkSession
-    n_parts = n_parts or spark.sparkContext.defaultParallelism
-    ranked = (
-        df.select(*order_cols)
-        .repartitionByRange(n_parts, *order_cols)
-        .sortWithinPartitions(*order_cols)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
-    )
-    rn = F.row_number().over(
-        Window.partitionBy("__pid").orderBy(*order_cols)
-    )
-    partials = ranked.groupBy(F.col("__pid").alias("pid")).agg(
-        F.count(F.lit(1)).alias("n_p")
-    )
-    b = partials.select(
-        F.col("pid").alias("__b_pid"), F.col("n_p").alias("__b_n")
-    )
-    offtot = (
-        partials.select(F.col("pid").alias("__pid"))
-        .crossJoin(b)
-        .groupBy("__pid")
-        .agg(
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        F.col("__b_pid") < F.col("__pid"), F.col("__b_n")
-                    )
-                ),
-                F.lit(0),
-            ).alias("__offset"),
-            F.sum("__b_n").alias("__n"),
-        )
-    )
-    # one row per quantile: (k-index, target position) — derived from
-    # the in-plan total so two quantiles may share a position
-    qarr = F.array(
-        *[
-            F.struct(F.lit(i).alias("qi"), F.lit(num).alias("num"), F.lit(den).alias("den"))
-            for i, (num, den) in enumerate(quantiles)
-        ]
-    )
-    positions = (
-        offtot.groupBy()
-        .agg(F.max("__n").alias("__n"))
-        .select(F.col("__n"), F.explode(qarr).alias("q"))
-        .select(
-            F.greatest(
-                F.lit(1),
-                F.expr("(q.num * __n + q.den - 1) div q.den"),
-            ).alias("__pos"),
-            F.col("q.qi").alias("__qi"),
-        )
-    )
-    hits = (
-        ranked.withColumn("__rn", rn)
-        .join(F.broadcast(offtot), "__pid")
-        .withColumn("__rk", F.col("__offset") + F.col("__rn"))
-        .join(F.broadcast(positions), F.col("__rk") == F.col("__pos"))
-    )
-    return hits.agg(
-        F.array_sort(F.collect_list(F.col(value_col))).alias("vals")
-    )
-
-
 def weighted_order_statistic_frame(
     df: DataFrame,
     order_cols: Sequence[str],

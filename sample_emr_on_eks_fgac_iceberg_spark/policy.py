@@ -14,7 +14,7 @@ reference:
 - per-principal enforcement with plan-time denial: an unauthorized read
   raises ``AccessDeniedException`` before any data movement, matching
   the reference's negative test
-  (consumer_account_setup/consumer_emr_on_eks_setup.sh:480-488).
+  (consumer_emr_on_eks_setup.sh:480-488).
 
 Enforcement strategy (SURVEY.md §4 "Policy injection"): the secured-
 view model — ``SecureSession`` wraps an isolated ``spark.newSession()``
@@ -26,6 +26,30 @@ resolution time, so Catalyst pushes it into the parquet scan
 the Lake Formation / Lakeguard (SIGMOD'25) threat model the reference
 implements with its secure-namespace split
 (consumer_emr_on_eks_setup.sh:18-19, 349-362).
+
+Statement dispatch (``SecureSession.sql``) follows Lakeguard in
+deciding on the plan, not on the text: every consumer statement is
+parsed ONCE by Spark's own parser (``parse_statement`` — the engine's
+only ``parsePlan`` call) and dispatched and authorized from that parse:
+
+- writes by plan class (``SecureSession._WRITE_PERMISSIONS``): the
+  permissions on the parsed target, then unfiltered SELECT on every
+  other parsed relation — an identifier that is not a known table
+  (``parquet.`/path```, a glob, a foreign view) is a denial;
+- reads: a known table this principal is not served, or a permanent
+  catalog table, denies before ``spark.sql`` runs; CTE names are local
+  and unknown names reach Spark (``TABLE_OR_VIEW_NOT_FOUND``);
+- EXPLAIN only over a query; consumer catalog statements (CREATE/DROP
+  VIEW, SHOW VIEWS/TABLES, DESCRIBE [DATABASE]) by plan class.
+
+A small residual grammar covers the engine statements Spark cannot
+parse, matched whole-statement before parsing: ``OPTIMIZE``, ``ALTER
+TABLE … WRITE ORDERED BY``, ``ALTER TABLE … [WRITE] PARTITIONED BY``,
+``ALTER TABLE … CREATE|REPLACE|DROP TAG|BRANCH`` (ALTER on the table)
+and ``SHOW GRANTS``. SQL sugar (EXCLUDE, FETCH FIRST, quantified
+subqueries, ASOF JOIN, QUALIFY, DISTINCT ON) is rewritten before the
+parse. Anything else that does not parse, or parses to a statement
+the consumer surface does not support, is refused without executing.
 """
 
 from __future__ import annotations
@@ -36,89 +60,142 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# File-format relation spellings (``parquet.`/path```) are never a
-# legitimate consumer token: the policy catalog exposes views only, and
-# a path (or glob) source would read warehouse files underneath the
-# policy layer on the trusted frontend. Matched case-insensitively with
-# optional whitespace around the dot; the companion pattern rejects any
-# backtick-quoted identifier containing a path separator or glob
-# character, catching spellings that dodge the format-name list.
-_FILE_RELATION_TOKEN_RE = re.compile(
-    r"\b(?:parquet|csv|json|orc|avro|text|textfile|binaryfile|xml|libsvm"
-    r"|delta|iceberg)\s*\.\s*`",
-    re.I,
+# Unresolved plan nodes carrying a multipart name: relations, and the
+# namespace SHOW TABLES / DESCRIBE DATABASE act on. (DROP TABLE and
+# CREATE TABLE/VIEW name theirs with an UnresolvedIdentifier.)
+_RELATION_NODES = frozenset(
+    {"UnresolvedRelation", "UnresolvedTable", "UnresolvedTableOrView",
+     "UnresolvedView", "UnresolvedNamespace"}
 )
-# Checked per quoted identifier (not one regex over the whole
-# statement: `a` … * … `b` would otherwise match ACROSS two legitimate
-# identifiers — found by the round-5 authorizer property test).
-_QUOTED_IDENT_RE = re.compile(r"`([^`]*)`")
-_PATH_CHARS_RE = re.compile(r"[/*?\[]")
-
-
-def _has_pathlike_ident(query: str) -> bool:
-    return any(
-        _PATH_CHARS_RE.search(m.group(1))
-        for m in _QUOTED_IDENT_RE.finditer(query)
-    )
-
-# Top-level parsed-plan classes that are writes (shared by the
-# consumer write guard and the frontend's EXPLAIN fence so the two
-# CTE-DML checks cannot drift).
-WRITE_PLAN_CLASSES = frozenset(
-    {
-        "InsertIntoStatement",
-        "DeleteFromTable",
-        "UpdateTable",
-        "MergeIntoTable",
-        "OverwriteByExpression",
-        "OverwritePartitionsDynamic",
-        "InsertIntoDir",
-    }
+# Plan nodes that write or execute without being Catalyst Commands: a
+# statement holding one anywhere is not a query.
+_EXECUTING_NODES = frozenset(
+    {"InsertIntoStatement", "InsertIntoDir", "Call",
+     "UnresolvedExecuteImmediate", "ScriptTransformation"}
 )
+# A plan bigger than this is refused rather than walked (fail closed).
+_MAX_PLAN_NODES = 10_000
 
 
-def parsed_write_class(spark: SparkSession, query: str) -> str | None:
-    """Classify a statement with Spark's own parser: returns the plan
-    class name if the statement parses to a write (unwrapping up to 4
-    levels of ``UnresolvedWith`` CTE wrappers), else None. Unparseable
-    statements return None — engine-specific spellings are handled by
-    the textual dispatch upstream, and every path that consults this
-    also keeps its textual write fence, so None never solely
-    authorizes."""
+@dataclass(frozen=True)
+class ParsedStatement:
+    """One statement as Spark's parser sees it — everything the policy
+    layer dispatches and authorizes on."""
+
+    plan_class: str  # top plan node, WITH (and EXPLAIN) unwrapped
+    target: str | None  # dotted name a command acts on
+    relations: tuple[tuple[str, ...], ...]  # every relation, CTE bodies and subqueries included
+    cte_names: frozenset[str]  # lower-cased, from every WITH in the plan
+    is_query: bool  # no command or executing node anywhere: a read
+    cte_wrapped: bool = False  # the statement opens with WITH
+    explain: str | None = None  # EXPLAIN mode, when the statement is one
+    node: object = field(default=None, compare=False, repr=False)  # unwrapped Java plan
+
+
+def _seq(jseq) -> list:
+    return [jseq.apply(i) for i in range(jseq.size())]
+
+
+def _ident(node, cls: str) -> tuple[str, ...] | None:
+    if cls == "UnresolvedIdentifier":
+        return tuple(_seq(node.nameParts()))
+    if cls in _RELATION_NODES:
+        return tuple(_seq(node.multipartIdentifier()))
+    return None
+
+
+def parse_statement(spark: SparkSession, text: str) -> ParsedStatement | None:
+    """Parse ``text`` with the session's own SQL parser and walk the
+    unresolved plan once: children, CTE bodies (Catalyst keeps them as
+    inner children, not ``children()``) and subquery plans inside
+    expressions — the relation set no textual spelling can evade.
+    Expressions are only walked where the plan's tree-pattern bits
+    report a subquery below. Returns None when Spark cannot parse the
+    statement, when a relation is named by an expression (``IDENTIFIER
+    (…)``) or when the plan exceeds the walk bound — callers refuse
+    those."""
     try:
-        node = spark._jsparkSession.sessionState().sqlParser().parsePlan(query)
-        cls = node.getClass().getSimpleName()
-        for _ in range(4):  # unwrap CTE wrappers: WITH … <command>
-            if cls != "UnresolvedWith":
-                break
-            node = node.child()
-            cls = node.getClass().getSimpleName()
-    except Exception:
+        node = spark._jsparkSession.sessionState().sqlParser().parsePlan(text)
+    except Exception:  # a syntax error, or the parser's own failure (deep nesting)
         return None
-    return cls if cls in WRITE_PLAN_CLASSES else None
-
-
-def parsed_insert_target(spark: SparkSession, query: str) -> str | None:
-    """Target table of a (possibly CTE-wrapped) ``INSERT INTO``
-    statement, resolved from Spark's parsed plan: unwrap
-    ``UnresolvedWith`` wrappers, then read the
-    ``InsertIntoStatement``'s table identifier. None when the statement
-    is not an INSERT or the identifier cannot be read (callers treat
-    None as a denial — fail closed)."""
-    try:
-        node = spark._jsparkSession.sessionState().sqlParser().parsePlan(query)
+    jvm = spark._jvm
+    cls = node.getClass().getSimpleName()
+    explain = None
+    if cls == "ExplainCommand":
+        explain = node.mode().name()
+        node = node.logicalPlan()
         cls = node.getClass().getSimpleName()
-        for _ in range(4):
-            if cls != "UnresolvedWith":
-                break
-            node = node.child()
-            cls = node.getClass().getSimpleName()
-        if cls != "InsertIntoStatement":
+    root, cte_wrapped = node, cls == "UnresolvedWith"
+    while cls == "UnresolvedWith":
+        node = node.child()
+        cls = node.getClass().getSimpleName()
+
+    subquery = jvm.org.apache.spark.sql.catalyst.trees.TreePattern.PLAN_EXPRESSION()
+    plan_expression = None
+    relations: list[tuple[str, ...]] = []
+    cte_names: set[str] = set()
+    seen: set[str] = set()
+    plans, visited = [(root, True)], 0
+    while plans:
+        visited += 1
+        if visited > _MAX_PLAN_NODES:
             return None
-        seq = node.table().multipartIdentifier()
-        return ".".join(str(seq.apply(i)) for i in range(seq.size()))
-    except Exception:
-        return None
+        plan, probe = plans.pop()
+        pcls = plan.getClass().getSimpleName()
+        seen.add(pcls)
+        if pcls == "PlanWithUnresolvedIdentifier":
+            return None
+        parts = _ident(plan, pcls)
+        if parts is not None:
+            relations.append(parts)
+        if pcls == "UnresolvedWith":
+            for pair in _seq(plan.cteRelations()):
+                cte_names.add(str(pair._1()).lower())
+                plans.append((pair._2(), True))
+        # subquery bits cover the node's expressions and its children,
+        # so a clear bit prunes the expression walk for the subtree
+        probe = probe and plan.containsPattern(subquery)
+        if probe:
+            if plan_expression is None:
+                plan_expression = jvm.java.lang.Class.forName(
+                    "org.apache.spark.sql.catalyst.expressions.PlanExpression"
+                )
+            exprs = _seq(plan.expressions())
+            while exprs:
+                e = exprs.pop()
+                if not e.containsPattern(subquery):
+                    continue
+                if plan_expression.isInstance(e):
+                    plans.append((e.plan(), True))
+                exprs.extend(_seq(e.children()))
+        plans.extend((c, probe) for c in _seq(plan.children()))
+
+    command = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.plans.logical.Command"
+    ).isInstance(node)
+    is_query = not command and not seen & _EXECUTING_NODES
+    target = None
+    if not is_query:
+        # INSERT keeps its table outside children(); every other
+        # command names its target in its first child
+        kids = _seq(node.children())
+        head = node.table() if cls == "InsertIntoStatement" else (kids or [None])[0]
+        hcls = head.getClass().getSimpleName() if head is not None else None
+        while hcls == "SubqueryAlias":
+            head = head.child()
+            hcls = head.getClass().getSimpleName()
+        parts = _ident(head, hcls) if head is not None else None
+        target = ".".join(parts) if parts else None
+    return ParsedStatement(
+        plan_class=cls,
+        target=target,
+        relations=tuple(relations),
+        cte_names=frozenset(cte_names),
+        is_query=is_query,
+        cte_wrapped=cte_wrapped,
+        explain=explain,
+        node=node,
+    )
 
 
 SELECT = "SELECT"
@@ -285,10 +362,12 @@ class PolicyStore:
         303-306)."""
         if granted_by is not None:
             delegator = self.grant_for(granted_by, table)
-            if delegator is None or not delegator.grant_option:
-                raise AccessDeniedException(granted_by, table, "GRANT")
-            if not frozenset(permissions) <= delegator.permissions:
-                raise AccessDeniedException(granted_by, table, "GRANT")
+            if (
+                delegator is None
+                or not delegator.grant_option
+                or not frozenset(permissions) <= delegator.permissions
+            ):
+                raise self.deny(granted_by, table, "GRANT")
         if filter_name is not None and filter_name not in self._filters:
             raise ValueError(f"Unknown data-cells filter '{filter_name}'")
         self._grants[(principal, table)] = Grant(
@@ -349,12 +428,7 @@ class PolicyStore:
     ) -> Grant:
         grant = self.database_grant_for(principal, db)
         if grant is None or action not in grant.permissions:
-            self.audit_log.append(
-                (principal, database_resource(db), action, "denied")
-            )
-            raise AccessDeniedException(
-                principal, database_resource(db), action
-            )
+            raise self.deny(principal, database_resource(db), action)
         self.audit_log.append(
             (principal, database_resource(db), action, "granted")
         )
@@ -391,11 +465,19 @@ class PolicyStore:
         ]
 
     # -------------------------------------------------- enforcement (A4)
+    def deny(
+        self, principal: str, table: str, action: str = SELECT
+    ) -> AccessDeniedException:
+        """Record a denial in the audit trail and return the exception
+        for the caller to raise — every denial goes through here, so
+        each one leaves exactly one ``denied`` record."""
+        self.audit_log.append((principal, table, action, "denied"))
+        return AccessDeniedException(principal, table, action)
+
     def authorize(self, principal: str, table: str, action: str = SELECT) -> Grant:
         grant = self.grant_for(principal, table)
         if grant is None or action not in grant.permissions:
-            self.audit_log.append((principal, table, action, "denied"))
-            raise AccessDeniedException(principal, table, action)
+            raise self.deny(principal, table, action)
         self.audit_log.append((principal, table, action, "granted"))
         return grant
 
@@ -408,9 +490,20 @@ class PolicyStore:
             if f is None:
                 # Dangling grant (its filter was deleted): fail closed
                 # as a denial, never as a KeyError.
-                raise AccessDeniedException(principal, table, action)
+                raise self.deny(principal, table, action)
             df = f.apply(df)
         return df
+
+
+# The heads of the statements that wrap a query — EXPLAIN [mode] and
+# CREATE [OR REPLACE] VIEW v AS — sliced off so the sugar rewrites see
+# only the wrapped query; the parse decides what the statement is.
+_QUERY_HEAD_RE = re.compile(
+    r"\s*(?:EXPLAIN(?:\s+(?:EXTENDED|FORMATTED|SIMPLE|CODEGEN|COST))?"
+    r"|CREATE\s+(?:OR\s+REPLACE\s+)?VIEW\s+[\w.]+\s+AS)\s+",
+    re.I,
+)
+_NOT_RESIDUAL = object()
 
 
 class SecureSession:
@@ -426,21 +519,40 @@ class SecureSession:
     fails at plan time with ``AccessDeniedException``.
     """
 
-    # statement shape → (table-name group, required permissions);
-    # UPDATE/MERGE need INSERT+DELETE (a row rewrite is both, Lake
-    # Formation's model for engines without an UPDATE permission type)
-    _WRITE_SHAPES = (
-        (r"\s*INSERT\s+OVERWRITE\s+(?:TABLE\s+)?([\w.]+)", (INSERT, DELETE)),
-        (r"\s*INSERT\s+INTO\s+([\w.]+)", (INSERT,)),
-        (r"\s*DELETE\s+FROM\s+([\w.]+)", (DELETE,)),
-        (r"\s*TRUNCATE\s+TABLE\s+([\w.]+)", (DELETE,)),
-        (r"\s*UPDATE\s+([\w.]+)\s+SET\b", (INSERT, DELETE)),
-        (r"\s*MERGE\s+INTO\s+([\w.]+)", (INSERT, DELETE)),
-        (r"\s*ALTER\s+TABLE\s+([\w.]+)", (ALTER,)),
-        (r"\s*ANALYZE\s+TABLE\s+([\w.]+)", (ALTER,)),
-        (r"\s*OPTIMIZE\s+([\w.]+)", (ALTER,)),
-        (r"\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?([\w.]+)", (DROP,)),
-    )
+    # Consumer writes by parsed plan class → the Lake Formation
+    # permissions they need on the parsed target. UPDATE/MERGE rewrite
+    # rows, so they need INSERT and DELETE (LF's model for engines
+    # without an UPDATE permission type), as does an overwriting INSERT;
+    # CREATE_TABLE is the database-level grant. The residual-grammar
+    # statements (OPTIMIZE, ALTER TABLE extensions) need ALTER.
+    _WRITE_PERMISSIONS = {
+        "InsertIntoStatement": (INSERT,),
+        "DeleteFromTable": (DELETE,),
+        "TruncateTable": (DELETE,),
+        "UpdateTable": (INSERT, DELETE),
+        "MergeIntoTable": (INSERT, DELETE),
+        "DropTable": (DROP,),
+        "AddColumns": (ALTER,),
+        "DropColumns": (ALTER,),
+        "RenameColumn": (ALTER,),
+        "AlterColumns": (ALTER,),
+        "RenameTable": (ALTER,),
+        "SetTableProperties": (ALTER,),
+        "AnalyzeTable": (ALTER,),
+        "AnalyzeColumn": (ALTER,),
+        "CreateTable": (CREATE_TABLE,),
+        "CreateTableAsSelect": (CREATE_TABLE,),
+        "ReplaceTable": (CREATE_TABLE,),
+        "ReplaceTableAsSelect": (CREATE_TABLE,),
+    }
+    # Consumer catalog statements by parsed plan class → handler.
+    _CATALOG_STATEMENTS = {
+        "DropView": "_drop_view",
+        "ShowViews": "_show_views",
+        "ShowTables": "_show_tables",
+        "DescribeNamespace": "_describe_database",
+        "DescribeRelation": "_describe_table",
+    }
 
     def __init__(
         self,
@@ -569,15 +681,16 @@ class SecureSession:
                 # grants around too). It must not break the session's
                 # OTHER tables; the dropped name simply never registers.
                 continue
-            if SELECT not in self._policy.grant_for(self.principal, name).permissions:
+            grant = self._policy.grant_for(self.principal, name)
+            if SELECT not in grant.permissions or (
+                grant.filter_name is not None
+                and grant.filter_name not in self._policy._filters
+            ):
+                # No SELECT, or a dangling grant (filter deleted): fail
+                # closed — the view never registers, and touching the
+                # table denies at the read fence.
                 continue
-            try:
-                secured = self._secured(name)
-            except AccessDeniedException:
-                # Dangling grant (filter deleted): fail closed — the
-                # view disappears and touching the table denies below.
-                continue
-            secured.createOrReplaceTempView(self._view_alias(name))
+            self._secured(name).createOrReplaceTempView(self._view_alias(name))
             granted.add(name)
         for stale in self._registered - granted:
             self._spark.catalog.dropTempView(self._view_alias(stale))
@@ -585,176 +698,69 @@ class SecureSession:
         self._seen_version = token
 
     # ------------------------------------------ write-source authorization
-    def _authorize_unfiltered_select(self, table: str) -> None:
-        """A DML source resolves UNWRAPPED on the trusted frontend, so
-        it needs full-table SELECT — a data-cells-filtered grant cannot
-        be honored there and is refused."""
-        self._policy.authorize(self.principal, table, SELECT)
+    def _deny(self, table: str, action: str = SELECT) -> AccessDeniedException:
+        return self._policy.deny(self.principal, table, action)
+
+    def _authorize_unfiltered(self, table: str, action: str) -> None:
+        """A statement that runs on the trusted frontend sees the
+        UNWRAPPED table, so a data-cells-filtered grant cannot be
+        honored there and is refused."""
         g = self._policy.grant_for(self.principal, table)
         if g is not None and g.filter_name is not None:
-            raise AccessDeniedException(self.principal, table, "SELECT (unfiltered)")
+            raise self._deny(table, f"{action} (unfiltered)")
 
-    def _parsed_relation_idents(self, query: str):
-        """Every relation identifier in ``query``, resolved by Spark's
-        own SQL parser (a py4j walk over the unresolved logical plan,
-        including subqueries and CTE bodies) — the authoritative
-        relation set no textual spelling can evade. Returns
-        ``(idents, cte_names)`` or ``None`` when the statement is not
-        Spark-parseable (engine-specific shapes like ``OPTIMIZE``)."""
-        try:
-            jplan = (
-                self._spark._jsparkSession.sessionState()
-                .sqlParser()
-                .parsePlan(query)
-            )
-        except Exception:
-            return None
-        idents: list[tuple[str, ...]] = []
-        cte_names: set[str] = set()
-        stack, visited = [jplan], 0
-        while stack:
-            visited += 1
-            if visited > 10_000:  # runaway tree: caller falls back (fail closed)
-                return None
-            node = stack.pop()
-            try:
-                cls = node.getClass().getSimpleName()
-            except Exception:
-                continue
-            if cls.startswith("Unresolved"):
-                # UnresolvedRelation / UnresolvedTable / UnresolvedTableOrView
-                # all carry multipartIdentifier(); other Unresolved* nodes
-                # don't and are skipped by the probe.
-                try:
-                    seq = node.multipartIdentifier()
-                    idents.append(
-                        tuple(seq.apply(i) for i in range(seq.size()))
-                    )
-                except Exception:
-                    pass
-            if cls == "UnresolvedWith":
-                # CTE definitions introduce local names that are not
-                # warehouse tables; references to them are legitimate.
-                # The definition BODIES are not in children() (Catalyst
-                # keeps cteRelations as innerChildren), so push them
-                # explicitly — a relation read inside a CTE body is a
-                # source like any other.
-                try:
-                    rels = node.cteRelations()
-                    for i in range(rels.size()):
-                        cte_names.add(str(rels.apply(i)._1()).lower())
-                        stack.append(rels.apply(i)._2())
-                except Exception:
-                    pass
-            # children() on every TreeNode; expressions() on plan nodes
-            # (join conds, SET clauses — where subqueries hide);
-            # plan() on subquery expressions.
-            for probe in ("children", "expressions"):
-                try:
-                    seq = getattr(node, probe)()
-                    stack.extend(seq.apply(i) for i in range(seq.size()))
-                except Exception:
-                    pass
-            try:
-                stack.append(node.plan())
-            except Exception:
-                pass
-        return idents, cte_names
-
-    def _authorize_write_sources(self, query: str, target: str) -> None:
-        """Authorize every non-target relation a consumer-delegated
-        write statement references. Fail-closed layers: (0) file-format
-        relation tokens and path-like quoted identifiers are rejected
-        outright — a path source would read warehouse files underneath
-        the policy layer; (1) the parsed-plan relation set must consist
-        solely of known tables, each authorized for unfiltered SELECT —
-        an identifier that is not a known table (glob path, foreign
-        temp view) is a denial, never a pass-through; (2) statements
-        Spark cannot parse fall back to a conservative word-boundary
-        scan over known table names (those shapes — OPTIMIZE, ALTER …
-        WRITE ORDERED BY — carry no source clause)."""
-        if _FILE_RELATION_TOKEN_RE.search(query) or _has_pathlike_ident(query):
-            raise AccessDeniedException(self.principal, "<file-relation>", SELECT)
+    def _authorize_write_sources(self, stmt: ParsedStatement) -> None:
+        """Authorize every relation a delegated write reads besides its
+        target: the statement executes on the TRUSTED frontend, where
+        source clauses (MERGE … USING s / INSERT … SELECT … FROM s)
+        resolve without policy wrapping, so each needs this principal's
+        unfiltered SELECT — or a write grant on one table becomes a
+        read of any table. The relation set is the parsed one, CTE
+        bodies and subqueries included; an identifier that is not a
+        known table (a path or glob relation, a temp view) is a denial,
+        never a pass-through."""
         known = {t.lower(): t for t in self._known_tables()}
-        tgt = target.lower()
-        parsed = self._parsed_relation_idents(query)
-        if parsed is not None:
-            idents, cte_names = parsed
-            for parts in idents:
-                name = ".".join(str(p) for p in parts).lower()
-                if name == tgt:
-                    continue
-                # A CTE-local name is exempt ONLY if it does not shadow
-                # a real table: Spark resolves a CTE body's reference
-                # to its own name against the OUTER scope (the base
-                # table), so `WITH t AS (SELECT … FROM t) …` reads the
-                # real t. Scoping the exemption per-branch isn't worth
-                # the complexity — when a CTE name collides with a
-                # known table, the statement needs the grant (fail
-                # closed; rename the CTE to avoid it).
-                if len(parts) == 1 and name in cte_names and name not in known:
-                    continue
-                resolved = known.get(name)
-                if resolved is None:
-                    raise AccessDeniedException(
-                        self.principal, ".".join(str(p) for p in parts), SELECT
-                    )
-                self._authorize_unfiltered_select(resolved)
-        else:
-            for t in self._known_tables():
-                if t.lower() != tgt and re.search(
-                    rf"\b{re.escape(t)}\b", query, re.I
-                ):
-                    self._authorize_unfiltered_select(t)
-
-    # Top-level parsed-plan classes that are writes. A statement whose
-    # TEXT dodges every _WRITE_SHAPES prefix can still parse to one of
-    # these (CTE-prefixed `WITH … INSERT INTO`, Hive-style
-    # `FROM t INSERT INTO u SELECT`); such spellings are denied rather
-    # than allowed to fall through to the read path.
-    _WRITE_PLAN_CLASSES = WRITE_PLAN_CLASSES
-
-    def _parsed_write_class(self, query: str) -> str | None:
-        """Spark's own parser as the authority on whether a statement
-        is a write, regardless of textual spelling. Returns the plan
-        class name for write statements, None for reads/unparseable
-        (unparseable shapes are engine-specific and handled upstream)."""
-        return parsed_write_class(self._spark, query)
+        target = stmt.target.lower()
+        for parts in stmt.relations:
+            name = ".".join(parts)
+            low = name.lower()
+            if low == target:
+                continue
+            # A CTE-local name is exempt ONLY if it does not shadow a
+            # real table: Spark resolves a CTE body's reference to its
+            # own name against the OUTER scope (the base table), so
+            # `WITH t AS (SELECT … FROM t) …` reads the real t — when
+            # a CTE name collides with a known table, the statement
+            # needs the grant (fail closed; rename the CTE to avoid it).
+            if len(parts) == 1 and low in stmt.cte_names and low not in known:
+                continue
+            if low not in known:
+                raise self._deny(name)
+            self._policy.authorize(self.principal, known[low], SELECT)
+            self._authorize_unfiltered(known[low], SELECT)
 
     # ------------------------------------------------------ user views
-    def _create_view(self, or_replace: bool, name: str, body: str):
+    def _create_view(self, stmt: ParsedStatement, body: str | None):
+        """User-defined views over granted tables (SURVEY §1.6: the
+        consumer-side equivalent of a resource link / secured view).
+        Spark's grammar makes the body a query; its text is stored."""
+        node, name = stmt.node, stmt.target
+        if not node.userSpecifiedColumns().isEmpty():
+            raise ValueError("CREATE VIEW column lists are not supported")
+        body = (body or node.originalText().get()).strip().rstrip(";")
         if self._views is None:
-            raise AccessDeniedException(self.principal, name, "CREATE_VIEW")
+            raise self._deny(name, "CREATE_VIEW")
         if "." in name:
             raise ValueError(
                 f"View names are single-part identifiers, got '{name}'"
             )
         if name.lower() in {t.lower() for t in self._known_tables()}:
             raise ValueError(f"View name '{name}' collides with a table")
-        # A view body is a QUERY, never a statement: the body re-executes
-        # through sql() at creation and on every referencing read, so a
-        # DML/DDL body would run its side effect repeatedly (and a write
-        # smuggled into a body would bypass nothing — but reject the
-        # shape outright rather than rely on downstream checks).
-        if not re.match(r"\s*(\(|SELECT\b|WITH\b|VALUES\b|TABLE\b)", body, re.I):
-            raise ValueError(
-                f"View body must be a query (SELECT/WITH/VALUES/TABLE), "
-                f"got: {body[:60]!r}"
-            )
-        # a CTE prefix can hide DML (`WITH … INSERT INTO t SELECT …`,
-        # which sql() would authorize and DELEGATE for a write-granted
-        # principal — executing the write once per view read); Spark's
-        # parsed plan class catches what the textual allowlist can't
-        if parsed_write_class(self._spark, body) is not None:
-            raise ValueError(
-                f"View body must be a query, not a write statement: "
-                f"{body[:60]!r}"
-            )
         existing = self._views.get(name)
         if existing is not None:
             if existing["owner"] != self.principal:
-                raise AccessDeniedException(self.principal, name, "ALTER_VIEW")
-            if not or_replace:
+                raise self._deny(name, "ALTER_VIEW")
+            if not node.replace():
                 raise ValueError(f"View '{name}' already exists")
         # Validate by executing the body as this principal right now:
         # an ungranted or filter-dangling source denies at creation the
@@ -767,13 +773,14 @@ class SecureSession:
         self._views[name] = {"owner": self.principal, "text": body}
         return None
 
-    def _drop_view(self, if_exists: bool, name: str):
+    def _drop_view(self, stmt: ParsedStatement):
+        name = stmt.target
         if self._views is None or name not in self._views:
-            if if_exists:
+            if stmt.node.ifExists():
                 return None
             raise ValueError(f"View '{name}' does not exist")
         if self._views[name]["owner"] != self.principal:
-            raise AccessDeniedException(self.principal, name, "DROP_VIEW")
+            raise self._deny(name, "DROP_VIEW")
         del self._views[name]
         return None
 
@@ -819,7 +826,7 @@ class SecureSession:
     # ---------------------------------------------------------- queries
     def table(self, name: str) -> DataFrame:
         if name not in set(self._known_tables()):
-            raise AccessDeniedException(self.principal, name)
+            raise self._deny(name)
         return self._secured(name)
 
     def readStream(self, name: str) -> DataFrame:
@@ -851,9 +858,9 @@ class SecureSession:
             views = self._all_view_texts()
             if name in views and self._stream_loader is not None:
                 return self._stream_view(name, frozenset())
-            raise AccessDeniedException(self.principal, name)
+            raise self._deny(name)
         if self._stream_loader is None:
-            raise AccessDeniedException(self.principal, name, "STREAM")
+            raise self._deny(name, "STREAM")
         # authorize BEFORE touching storage: an ungranted principal
         # must not learn the table's history shape from the loader's
         # append-only validation errors
@@ -862,7 +869,7 @@ class SecureSession:
         if grant.filter_name is not None:
             f = self._policy._filters.get(grant.filter_name)
             if f is None:  # dangling grant: fail closed (as in _secured)
-                raise AccessDeniedException(self.principal, name, SELECT)
+                raise self._deny(name)
             raw = f.apply(raw)
         return raw
 
@@ -944,11 +951,11 @@ class SecureSession:
         permissions have no cell-level variant), so a data-cells-
         filtered principal's write grant still applies as-is."""
         if table not in set(self._known_tables()):
-            raise AccessDeniedException(self.principal, table, perms[0])
+            raise self._deny(table, perms[0])
         for perm in perms:
             self._policy.authorize(self.principal, table, perm)
         if self._stream_sinks is None:
-            raise AccessDeniedException(self.principal, table, perms[0])
+            raise self._deny(table, perms[0])
 
     def writeStream_into(
         self,
@@ -998,7 +1005,7 @@ class SecureSession:
         ``order_by``, idempotent under replay). An upsert rewrites
         matched rows, so it demands INSERT **and** DELETE — the same
         rule the batch surface applies to UPDATE/MERGE
-        (_WRITE_SHAPES); either missing grant raises at sink
+        (_WRITE_PERMISSIONS); either missing grant raises at sink
         definition, before any micro-batch."""
         self._authorize_stream_sink(table, (INSERT, DELETE))
         sink = self._stream_sinks["upsert"](table, source_id, on, keys, order_by)
@@ -1013,239 +1020,303 @@ class SecureSession:
         return q
 
     def sql(self, query: str) -> DataFrame:
-        import re
-
-        from pyspark.sql.utils import AnalysisException
-
+        """Run one statement as this principal: residual grammar first,
+        then SQL sugar, then ONE Spark parse that every dispatch and
+        authorization decision below reads (module docstring)."""
         self._refresh_views()
-        # EXPLAIN <query>: the policy-transparency surface — returns the
-        # SECURED plan (injected row filter, pruned columns, masks) for
-        # the caller's own authorization, so a consumer can audit what
-        # the engine will actually scan. Authorization runs exactly as
-        # for execution: an ungranted relation denies at plan time, and
-        # nothing executes (plan text only). Write statements are not
-        # explainable on the consumer surface — the recursive sql() call
-        # would execute them via the DML delegate.
-        m = re.match(
-            r"\s*EXPLAIN\s+(EXTENDED\s+|FORMATTED\s+|SIMPLE\s+)?(.*)$",
-            query,
-            re.I | re.S,
-        )
-        if m:
-            from sample_emr_on_eks_fgac_iceberg_spark.plans import explain_str
-
-            rest = m.group(2).strip().rstrip(";")
-            # Three fences, all required: (a) a query-shape allowlist so
-            # non-query statements the recursive sql() call would
-            # EXECUTE (CREATE/DROP VIEW, SHOW, CALL) never reach it;
-            # (b) the parsed-plan write check (catches CTE-prefixed DML
-            # that starts with WITH); (c) the textual write shapes.
-            if (
-                not re.match(r"\s*(\(|(SELECT|WITH|VALUES|TABLE)\b)", rest, re.I)
-                or self._parsed_write_class(rest) is not None
-                or any(re.match(shape, rest, re.I) for shape, _ in self._WRITE_SHAPES)
-            ):
+        out = self._residual(query)
+        if out is not _NOT_RESIDUAL:
+            return out
+        m = _QUERY_HEAD_RE.match(query)
+        head, body = (query[: m.end()], query[m.end() :]) if m else ("", query)
+        rewritten, drops = self._rewrite_sugar(body)
+        stmt = parse_statement(self._spark, head + rewritten)
+        if stmt is None:
+            raise ValueError(
+                "Statement must be a query or a supported consumer "
+                f"statement; Spark cannot parse it: {query[:80]!r}"
+            )
+        if stmt.explain is not None:
+            # Returns the SECURED plan (injected row filter, pruned
+            # columns, masks): authorization runs exactly as for
+            # execution and nothing executes. Only queries explain —
+            # anything else would execute through its delegate.
+            if not (stmt.is_query and m):
                 raise ValueError(
                     "EXPLAIN supports read queries only on the consumer surface"
                 )
-            mode = (m.group(1) or "simple").strip().lower()
-            plan = explain_str(self.sql(rest), mode)
+            from sample_emr_on_eks_fgac_iceberg_spark.plans import explain_str
+
+            plan = explain_str(self._read(rewritten, stmt, drops), stmt.explain)
             return self._spark.createDataFrame([(plan,)], "plan string")
-        # Write statements: authorize against LF write permissions, then
-        # delegate to the trusted engine frontend. CREATE TABLE needs
-        # the database-level CREATE_TABLE grant (VERDICT r13 missing
-        # #2); the creator then owns the new table (LF grants the
-        # creator ALL on tables it creates). CREATE OR REPLACE is a
-        # DROP in disguise — it stays denied (a DROP table grant can't
-        # exist before the table does).
-        m = re.match(
-            r"\s*CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?([\w.]+)", query, re.I
-        )
-        if m and not re.match(r"\s*CREATE\s+OR\s+REPLACE\b", query, re.I):
-            target = m.group(1)
-            db = database_of(target)
-            self._policy.authorize_database(self.principal, db, CREATE_TABLE)
-            # CTAS sources resolve UNFILTERED on the trusted frontend —
-            # authorize every referenced relation like any other
-            # delegated write (plain DDL has no source relations)
-            self._authorize_write_sources(query, target)
-            if self._dml_executor is None:
-                raise AccessDeniedException(
-                    self.principal, database_resource(db), CREATE_TABLE
-                )
-            existed = target in set(self._known_tables())
-            out = self._dml_executor(query)
-            # owner grant — only if the statement actually created the
-            # table (IF NOT EXISTS on an existing table is a no-op and
-            # must not mint grants for a bystander)
-            if not existed and target in set(self._known_tables()):
-                self._policy.grant(
-                    self.principal,
-                    target,
-                    frozenset({SELECT, DESCRIBE, INSERT, DELETE, ALTER, DROP}),
-                    grant_option=True,
-                )
-            return out
-        if re.match(r"\s*CREATE\s+(OR\s+REPLACE\s+)?TABLE\b", query, re.I):
-            raise AccessDeniedException(self.principal, "<database>", "CREATE_TABLE")
-        # User-defined views over granted tables (SURVEY §1.6: the
-        # consumer-side equivalent of a resource link / secured view).
-        m = re.match(
-            r"\s*CREATE\s+(OR\s+REPLACE\s+)?VIEW\s+([\w.]+)\s+AS\s+(.*)$",
-            query,
-            re.I | re.S,
-        )
-        if m:
-            return self._create_view(
-                bool(m.group(1)), m.group(2), m.group(3).rstrip().rstrip(";")
+        if stmt.is_query:
+            return self._read(rewritten, stmt, drops)
+        if stmt.plan_class == "CreateView" and not stmt.cte_wrapped:
+            # the body is stored as written: it re-runs through sql(),
+            # sugar and all, on every read
+            return self._create_view(stmt, body if m else None)
+        if drops is not None:
+            raise ValueError(
+                "ASOF JOIN, QUALIFY and DISTINCT ON are supported in read "
+                "queries only on the consumer surface"
             )
-        m = re.match(
-            r"\s*DROP\s+VIEW\s+(IF\s+EXISTS\s+)?([\w.]+)\s*;?\s*$", query, re.I
+        if stmt.plan_class in self._WRITE_PERMISSIONS:
+            return self._write(stmt, query)
+        handler = self._CATALOG_STATEMENTS.get(stmt.plan_class)
+        if handler is None or stmt.cte_wrapped:
+            # CALL (procedures are a producer surface with no consumer
+            # grant), multi-table INSERT, SET, CACHE, temp views, …
+            raise self._deny(f"<{stmt.plan_class}>", "EXECUTE")
+        return getattr(self, handler)(stmt)
+
+    # ------------------------------------------------ residual grammar
+    def _residual(self, query: str):
+        """Engine statements Spark's parser rejects, matched whole-
+        statement with the trusted frontend's own patterns (so both
+        surfaces accept the same shapes). None of them carries a source
+        relation. Returns _NOT_RESIDUAL for every other statement."""
+        from sample_emr_on_eks_fgac_iceberg_spark.sql_frontend import (
+            _ALTER_CREATE_REF_RE,
+            _ALTER_DROP_REF_RE,
+            _ALTER_PARTITION_RE,
+            _ALTER_WRITE_ORDER_RE,
+            _OPTIMIZE_RE,
+            _SHOW_GRANTS_RE,
         )
+
+        m = _SHOW_GRANTS_RE.match(query)
         if m:
-            return self._drop_view(bool(m.group(1)), m.group(2))
-        if re.match(r"\s*SHOW\s+VIEWS\s*;?\s*$", query, re.I):
-            rows = sorted(
-                (name, v["owner"]) for name, v in (self._views or {}).items()
+            return self._show_grants(m.group(1), m.group(2))
+        for shape in (
+            _OPTIMIZE_RE,
+            _ALTER_WRITE_ORDER_RE,
+            _ALTER_PARTITION_RE,
+            _ALTER_CREATE_REF_RE,
+            _ALTER_DROP_REF_RE,
+        ):
+            m = shape.match(query)
+            if m:
+                target = m.group(1)
+                self._policy.authorize(self.principal, target, ALTER)
+                if shape is _OPTIMIZE_RE:
+                    # compaction stats are computed over the unfiltered table
+                    self._authorize_unfiltered(target, ALTER)
+                return self._delegate(query, target, ALTER)
+        return _NOT_RESIDUAL
+
+    def _show_grants(self, db: str | None, table: str | None) -> DataFrame:
+        """SHOW GRANTS [ON t]: Lake Formation lets any principal list its
+        own permissions (and the ones it granted down a delegation
+        chain) — never other principals'. Same row shape as the
+        producer surface (sql_frontend.py) so tooling can reuse it."""
+        resource = database_resource(db) if db else table
+        rows = [
+            (
+                g.principal,
+                g.table,
+                ", ".join(sorted(g.permissions)),
+                g.grant_option,
+                g.filter_name or "",
             )
-            return self._spark.createDataFrame(
-                rows, "view_name string, owner string"
-            )
-        # Catalog discovery under database-level DESCRIBE (VERDICT r13
-        # missing #2 — the reference's cross-account Database DESCRIBE,
-        # producer_iceberg_datalake_setup.sh:221-229): SHOW TABLES lists
-        # a database's tables only when the caller holds DESCRIBE on
-        # the DATABASE, and then only the tables the caller also holds
-        # some table-level permission on (LF: database DESCRIBE makes
-        # the container visible, table visibility still needs a table
-        # grant). No database grant → EMPTY listing, not an error
-        # (discovery must not confirm what exists).
-        m = re.match(
-            r"\s*SHOW\s+TABLES(?:\s+(?:IN|FROM)\s+(\w+))?\s*;?\s*$", query, re.I
+            for g in self._policy.list_grants_visible_to(self.principal, resource)
+        ]
+        return self._spark.createDataFrame(
+            sorted(rows),
+            "principal string, table string, permissions string, "
+            "grant_option boolean, data_cells_filter string",
         )
-        if m:
-            db = m.group(1) or "default"
-            schema = "table_name string"
-            g = self._policy.database_grant_for(self.principal, db)
-            if g is None or DESCRIBE not in g.permissions:
-                return self._spark.createDataFrame([], schema)
-            rows = [
-                (t,)
-                for t in self._known_tables()
-                if database_of(t) == db
-                and self._policy.grant_for(self.principal, t) is not None
-            ]
-            return self._spark.createDataFrame(sorted(rows), schema)
-        m = re.match(
-            r"\s*DESCRIBE\s+(?:DATABASE|SCHEMA)\s+(\w+)\s*;?\s*$", query, re.I
+
+    # ------------------------------------------------------------ writes
+    def _delegate(self, query: str, table: str, action: str):
+        """Hand an authorized write to the trusted engine frontend (None
+        → this session is read-only: fail closed)."""
+        if self._dml_executor is None:
+            raise self._deny(table, action)
+        return self._dml_executor(query)
+
+    def _write(self, stmt: ParsedStatement, query: str):
+        """A write, authorized from its parse: the plan class's
+        permissions on the parsed target, then every source relation.
+        The one CTE-wrapped write the engine supports is `WITH … INSERT
+        INTO t SELECT …`; every other CTE-wrapped write denies."""
+        cls, target = stmt.plan_class, stmt.target
+        perms = self._WRITE_PERMISSIONS[cls]
+        if target is None or (stmt.cte_wrapped and cls != "InsertIntoStatement"):
+            raise self._deny(f"<{cls}>", "WRITE")
+        if CREATE_TABLE in perms:
+            return self._create_table(stmt, query)
+        if cls == "InsertIntoStatement" and stmt.node.overwrite():
+            perms += (DELETE,)
+        for perm in perms:
+            self._policy.authorize(self.principal, target, perm)
+        if cls.startswith("Analyze"):
+            # ANALYZE returns data-derived numbers (min/max, row counts)
+            # computed over the UNFILTERED table
+            self._authorize_unfiltered(target, ALTER)
+        self._authorize_write_sources(stmt)
+        return self._delegate(query, target, perms[0])
+
+    def _create_table(self, stmt: ParsedStatement, query: str):
+        """CREATE TABLE needs the database-level CREATE_TABLE grant
+        (VERDICT r13 missing #2); the creator then owns the new table
+        (LF grants the creator ALL on tables it creates). CREATE OR
+        REPLACE is a DROP in disguise — it stays denied (a DROP table
+        grant can't exist before the table does)."""
+        if stmt.plan_class.startswith("Replace"):
+            raise self._deny("<database>", CREATE_TABLE)
+        target = stmt.target
+        db = database_of(target)
+        self._policy.authorize_database(self.principal, db, CREATE_TABLE)
+        # CTAS sources resolve UNFILTERED on the trusted frontend
+        self._authorize_write_sources(stmt)
+        existed = target in set(self._known_tables())
+        out = self._delegate(query, database_resource(db), CREATE_TABLE)
+        # owner grant — only if the statement actually created the
+        # table (IF NOT EXISTS on an existing table is a no-op and must
+        # not mint grants for a bystander)
+        if not existed and target in set(self._known_tables()):
+            self._policy.grant(
+                self.principal,
+                target,
+                frozenset({SELECT, DESCRIBE, INSERT, DELETE, ALTER, DROP}),
+                grant_option=True,
+            )
+        return out
+
+    # ------------------------------------------------- catalog statements
+    def _show_views(self, stmt: ParsedStatement) -> DataFrame:
+        rows = sorted((name, v["owner"]) for name, v in (self._views or {}).items())
+        return self._spark.createDataFrame(rows, "view_name string, owner string")
+
+    def _show_tables(self, stmt: ParsedStatement) -> DataFrame:
+        """Catalog discovery under database-level DESCRIBE (VERDICT r13
+        missing #2 — the reference's cross-account Database DESCRIBE,
+        producer_iceberg_datalake_setup.sh:221-229): SHOW TABLES lists
+        a database's tables only when the caller holds DESCRIBE on the
+        DATABASE, and then only the tables the caller also holds some
+        table-level permission on (LF: database DESCRIBE makes the
+        container visible, table visibility still needs a table grant).
+        No database grant → EMPTY listing, not an error (discovery must
+        not confirm what exists)."""
+        if stmt.node.pattern().isDefined():
+            raise ValueError("SHOW TABLES … LIKE is not supported")
+        db = stmt.target or "default"
+        schema = "table_name string"
+        g = self._policy.database_grant_for(self.principal, db)
+        if g is None or DESCRIBE not in g.permissions:
+            return self._spark.createDataFrame([], schema)
+        return self._spark.createDataFrame(sorted(self._visible_tables(db)), schema)
+
+    def _visible_tables(self, db: str) -> list[tuple[str]]:
+        return [
+            (t,)
+            for t in self._known_tables()
+            if database_of(t) == db
+            and self._policy.grant_for(self.principal, t) is not None
+        ]
+
+    def _describe_table(self, stmt: ParsedStatement) -> DataFrame:
+        return self._spark.createDataFrame(
+            self.describe(stmt.target), "col_name string, data_type string"
         )
-        if m:
-            db = m.group(1)
-            self._policy.authorize_database(self.principal, db, DESCRIBE)
-            # same non-disclosure posture as SHOW TABLES: the count
-            # covers only tables the caller holds a table-level grant
-            # on — a database DESCRIBE alone must not reveal how many
-            # ungranted tables exist (or when one is added)
-            n = sum(
-                1
-                for t in self._known_tables()
-                if database_of(t) == db
-                and self._policy.grant_for(self.principal, t) is not None
-            )
-            return self._spark.createDataFrame(
-                [("Database Name", db), ("Table Count", str(n))],
-                "info_name string, info_value string",
-            )
-        # Stored procedures are a producer/maintenance surface; the
-        # consumer permission model (SELECT/DESCRIBE ± write perms on
-        # tables) has no procedure grants — always denied.
-        if re.match(r"\s*CALL\s+", query, re.I):
-            raise AccessDeniedException(self.principal, "<maintenance>", "CALL")
-        # SHOW GRANTS [ON t]: Lake Formation lets any principal list its
-        # own permissions (and the ones it granted down a delegation
-        # chain) — never other principals'. Same row shape as the
-        # producer surface (sql_frontend.py) so tooling can reuse it.
-        m = re.match(
-            r"\s*SHOW\s+GRANTS"
-            r"(?:\s+ON\s+(?:(?:DATABASE|SCHEMA)\s+(\w+)|(?:TABLE\s+)?([\w.]+)))?"
-            r"\s*;?\s*$",
-            query,
-            re.I,
+
+    def _describe_database(self, stmt: ParsedStatement) -> DataFrame:
+        # same non-disclosure posture as SHOW TABLES: the count covers
+        # only tables the caller holds a table-level grant on — a
+        # database DESCRIBE alone must not reveal how many ungranted
+        # tables exist (or when one is added)
+        db = stmt.target
+        self._policy.authorize_database(self.principal, db, DESCRIBE)
+        return self._spark.createDataFrame(
+            [("Database Name", db), ("Table Count", str(len(self._visible_tables(db))))],
+            "info_name string, info_value string",
         )
-        if m:
-            resource = database_resource(m.group(1)) if m.group(1) else m.group(2)
-            rows = [
-                (
-                    g.principal,
-                    g.table,
-                    ", ".join(sorted(g.permissions)),
-                    g.grant_option,
-                    g.filter_name or "",
-                )
-                for g in self._policy.list_grants_visible_to(
-                    self.principal, resource
-                )
-            ]
-            return self._spark.createDataFrame(
-                sorted(rows),
-                "principal string, table string, permissions string, "
-                "grant_option boolean, data_cells_filter string",
-            )
-        for shape, perms in self._WRITE_SHAPES:
-            wm = re.match(shape, query, re.I)
-            if wm:
-                target = wm.group(1)
-                for perm in perms:
-                    self._policy.authorize(self.principal, target, perm)
-                # ANALYZE/OPTIMIZE return data-derived numbers (min/max,
-                # row counts) computed over the UNFILTERED table — a
-                # data-cells-filtered principal may not see those.
-                if re.match(r"\s*(ANALYZE|OPTIMIZE)\b", query, re.I):
-                    g = self._policy.grant_for(self.principal, target)
-                    if g is not None and g.filter_name is not None:
-                        raise AccessDeniedException(
-                            self.principal, target, "ALTER (unfiltered)"
-                        )
-                # The statement executes on the TRUSTED frontend, where
-                # source clauses (MERGE … USING s / INSERT OVERWRITE t
-                # SELECT … FROM s) resolve without policy wrapping — so
-                # every relation the statement references needs this
-                # principal's SELECT, or a write grant on one table
-                # becomes a read of any table (exfiltration via DML
-                # source). Authorization is plan-based: Spark's own
-                # parser resolves the relation set, so path/glob
-                # spellings and quoted identifiers cannot dodge it.
-                self._authorize_write_sources(query, target)
-                if self._dml_executor is None:
-                    raise AccessDeniedException(self.principal, target, perms[0])
-                return self._dml_executor(query)
-        # A write statement whose spelling matched no shape above (CTE
-        # prefix, Hive FROM…INSERT, future syntax) must never reach the
-        # read path. The one CTE-wrapped write the engine supports —
-        # `WITH … INSERT INTO t SELECT …` — is authorized exactly like
-        # a plain INSERT (INSERT on the parsed target + unfiltered
-        # SELECT on every parsed source relation, CTE names excluded)
-        # and delegated; every other parsed write class denies, fail
-        # closed.
-        wcls = self._parsed_write_class(query)
-        if wcls == "InsertIntoStatement" and re.match(r"\s*WITH\b", query, re.I):
-            target = parsed_insert_target(self._spark, query)
-            if target is None:
-                raise AccessDeniedException(self.principal, f"<{wcls}>", "WRITE")
-            self._policy.authorize(self.principal, target, INSERT)
-            self._authorize_write_sources(query, target)
-            if self._dml_executor is None:
-                raise AccessDeniedException(self.principal, target, INSERT)
-            return self._dml_executor(query)
-        if wcls is not None:
-            raise AccessDeniedException(self.principal, f"<{wcls}>", "WRITE")
-        m = re.match(r"\s*DESCRIBE\s+(?:TABLE\s+)?([\w.]+)\s*;?\s*$", query, re.I)
-        if m:
-            rows = self.describe(m.group(1))
-            return self._spark.createDataFrame(
-                rows, "col_name string, data_type string"
+
+    # ------------------------------------------------------------- reads
+    def _rewrite_sugar(self, query: str) -> tuple[str, tuple | None]:
+        """SQL sugar Spark's parser lacks, rewritten BEFORE the parse
+        (the raw text does not parse, so the parse could never inspect
+        it). The textual rewrites (EXCLUDE / FETCH FIRST / quantified
+        ALL-ANY-SOME) introduce no relations. ASOF JOIN reads relation
+        frames directly, so its resolver is a policy fence of its own;
+        it, QUALIFY and DISTINCT ON are read sugar — the second value
+        is their (drop __qualify, drop __don) flags when they changed
+        the text, else None. User views materialize first so an as-of
+        over a view resolves through the invoker's own policy path."""
+        if re.search(r"\bEXCLUDE\b|\bFETCH\b|\b(?:ALL|ANY|SOME)\s*\(", query, re.I):
+            from sample_emr_on_eks_fgac_iceberg_spark.sql_frontend import (
+                rewrite_text_sugar,
             )
 
+            query, _ = rewrite_text_sugar(query)
+        if not re.search(r"\bASOF\b|\bQUALIFY\b|DISTINCT\s+ON\s*\(", query, re.I):
+            return query, None
+        from sample_emr_on_eks_fgac_iceberg_spark.sql_frontend import (
+            rewrite_asof_joins,
+            rewrite_distinct_on,
+            rewrite_qualify,
+        )
+
+        self._materialize_views(query)
+        rewritten = rewrite_asof_joins(query, self._asof_frame)
+        rewritten, drop_qualify = rewrite_qualify(rewritten)
+        rewritten, drop_don = rewrite_distinct_on(rewritten)
+        if rewritten == query:
+            return query, None
+        return rewritten, (drop_qualify, drop_don)
+
+    def _asof_frame(self, name: str) -> DataFrame | None:
+        """ASOF JOIN side resolver: only this session's TEMPORARY views —
+        the policy-filtered registrations, user views — resolve; a
+        known table this principal is not served and a permanent
+        catalog table (an unfiltered SPJ mirror) deny; unknown names
+        keep their not-found semantics (None)."""
+        if name in self._registered:
+            return self._spark.table(self._view_alias(name))
+        if name in set(self._known_tables()):
+            raise self._deny(name)
+        try:
+            t = self._spark.catalog.getTable(name)
+        except Exception:
+            return None
+        if not t.isTemporary:
+            raise self._deny(name)
+        return self._spark.table(name)
+
+    def _authorize_reads(self, stmt: ParsedStatement) -> None:
+        """The read fence, on the parsed relation set and before
+        ``spark.sql`` runs: a known table this principal is not served
+        (ungranted, or its filter was deleted) is the reference's plan-
+        time denial (consumer_emr_on_eks_setup.sh:480-488); a PERMANENT
+        catalog table — an SPJ bucketed mirror or anything else
+        saveAsTable'd into the shared metastore, holding UNFILTERED rows
+        — denies too. CTE names are local relations (they may shadow a
+        table or mirror name), and unknown names flow on to Spark's
+        TABLE_OR_VIEW_NOT_FOUND."""
+        known = {t.lower(): t for t in self._known_tables()}
+        served = {t.lower() for t in self._registered}
+        for parts in stmt.relations:
+            name = ".".join(parts)
+            low = name.lower()
+            if (len(parts) == 1 and low in stmt.cte_names) or low in served:
+                continue
+            if low in known:
+                raise self._deny(known[low])
+            if self._is_permanent_table(parts):
+                raise self._deny(name)
+
+    def _is_permanent_table(self, parts: tuple[str, ...]) -> bool:
+        from pyspark.errors import AnalysisException
+
+        quoted = ".".join("`" + p.replace("`", "``") + "`" for p in parts)
+        catalog = self._spark.catalog
+        try:
+            return catalog.tableExists(quoted) and not catalog.getTable(quoted).isTemporary
+        except AnalysisException:
+            return False  # not resolvable here: Spark raises its own error
+
+    def _read(self, query: str, stmt: ParsedStatement, drops) -> DataFrame:
+        self._authorize_reads(stmt)
         # Metadata tables under DESCRIBE: a principal who may DESCRIBE
         # the table may read its snapshot log / history (not files or
         # partitions — those expose physical paths, a producer surface).
@@ -1302,19 +1373,21 @@ class SecureSession:
             query,
             flags=re.I,
         )
-        # Catalog-qualified references: a granted dev.db.table rewrites
-        # to its registered alias; a known-but-ungranted one is a
-        # plan-time denial (consumer_emr_on_eks_setup.sh:407 queries
+        # Catalog-qualified references the fence let through: a served
+        # dev.db.table rewrites to its registered alias
+        # (consumer_emr_on_eks_setup.sh:407 queries
         # dev.consumer_healthcare_db.rl_patients through a 3-part name).
-        for name in sorted(self._known_tables(), key=len, reverse=True):
-            if "." not in name:
-                continue
-            pattern = rf"(?<![\w.`]){re.escape(name)}(?![\w.])"
-            if not re.search(pattern, query):
-                continue
-            if self._policy.grant_for(self.principal, name) is None:
-                raise AccessDeniedException(self.principal, name)
-            query = re.sub(pattern, f"`{self._view_alias(name)}`", query)
+        from sample_emr_on_eks_fgac_iceberg_spark.sql_frontend import (
+            _sub_outside_strings,
+        )
+
+        dotted = {".".join(p) for p in stmt.relations if len(p) > 1}
+        for name in sorted(dotted & self._registered, key=len, reverse=True):
+            query = _sub_outside_strings(
+                rf"(?<![\w.`]){re.escape(name)}(?![\w.])",
+                f"`{self._view_alias(name)}`",
+                query,
+            )
         # Consumer-side storage-partitioned joins: when this query joins
         # two granted bucket[N] tables on their bucket keys with equal
         # N, re-register those views over the policy-filtered BUCKETED
@@ -1343,125 +1416,18 @@ class SecureSession:
                 except AccessDeniedException:
                     continue
                 secured.createOrReplaceTempView(self._view_alias(name))
-        # SQL sugar the Spark parser lacks — ASOF JOIN and QUALIFY —
-        # rewrites here exactly as on the producer frontend, BEFORE the
-        # parsed-relation fence below (the raw text does not parse, so
-        # the fence could never inspect it). The ASOF rewrite reads
-        # relation frames directly, so its resolver IS the policy
-        # fence: only this session's TEMPORARY views — the policy-
-        # filtered registrations, __meta/__tt views, user views —
-        # resolve; a permanent catalog table (an unfiltered SPJ mirror)
-        # raises the same plan-time denial the parsed fence enforces,
-        # and unknown names keep their not-found semantics. User views
-        # materialize first so an as-of over a view resolves through
-        # the invoker's own policy path.
-        # Purely textual sugar (EXCLUDE / FETCH FIRST / quantified
-        # ALL-ANY-SOME) rewrites BEFORE the parsed fence for the same
-        # reason as ASOF/QUALIFY below: the raw text does not parse.
-        # The rewrites introduce no new relations — every relation in
-        # the rewritten text was already in the original, so the
-        # parsed-relation authorization below still sees them all.
-        if re.search(
-            r"\bEXCLUDE\b|\bFETCH\b|\b(?:ALL|ANY|SOME)\s*\(", query, re.I
-        ):
-            from sample_emr_on_eks_fgac_iceberg_spark.sql_frontend import (
-                rewrite_text_sugar,
-            )
-
-            query, _ = rewrite_text_sugar(query)
-        if re.search(r"\bASOF\b|\bQUALIFY\b|DISTINCT\s+ON\s*\(", query, re.I):
-            from sample_emr_on_eks_fgac_iceberg_spark.sql_frontend import (
-                rewrite_asof_joins,
-                rewrite_distinct_on,
-                rewrite_qualify,
-            )
-
-            self._materialize_views(query)
-
-            def _resolve(name: str):
-                try:
-                    t = self._spark.catalog.getTable(name)
-                except Exception:
-                    # exists in the warehouse but not registered for
-                    # this principal → the same plan-time denial the
-                    # unresolved-relation handler below produces
-                    if (
-                        name in set(self._known_tables())
-                        and name not in self._registered
-                    ):
-                        self._policy.audit_log.append(
-                            (self.principal, name, SELECT, "denied")
-                        )
-                        raise AccessDeniedException(self.principal, name)
-                    return None
-                if not t.isTemporary:
-                    raise AccessDeniedException(self.principal, name)
-                return self._spark.table(name)
-
-            query = rewrite_asof_joins(query, _resolve)
-            query, drop_qualify = rewrite_qualify(query)
-            query, drop_don = rewrite_distinct_on(query)
-        else:
-            drop_qualify = drop_don = False
-        # Engine-internal PERMANENT catalog tables (the SPJ bucketed
-        # mirrors `__spj_*`, or anything else saveAsTable'd into the
-        # shared metastore) are visible to every session of the
-        # context — including this one. They hold UNFILTERED rows, so
-        # resolving one here would be a policy bypass (round-12 probe:
-        # a consumer could SELECT a mirror of an ungranted table).
-        # Deny any parsed relation that resolves to a non-temporary
-        # catalog table; the session's own registrations (policy
-        # views, __meta/__tt views, user views) are all temp views and
-        # pass, and unknown names still flow to TABLE_OR_VIEW_NOT_FOUND.
-        parsed = self._parsed_relation_idents(query)
-        if parsed is not None:
-            idents, cte_names = parsed
-            for ident in idents:
-                nm = ".".join(ident)
-                if nm.lower() in cte_names:
-                    continue
-                try:
-                    t = self._spark.catalog.getTable(nm)
-                except Exception:
-                    continue
-                if not t.isTemporary:
-                    raise AccessDeniedException(self.principal, nm)
         # User views referenced by the query: rebuild each through this
         # principal's own policy path (invoker's rights) so revokes and
         # filter changes propagate to every subsequent read.
         self._materialize_views(query)
-        try:
-            df = self._spark.sql(query)
+        df = self._spark.sql(query)
+        if drops:
+            drop_qualify, drop_don = drops
             if drop_qualify:
                 df = df.drop("__qualify")
             if drop_don:
-                df = df.drop(
-                    "__don", *[c for c in df.columns if c.startswith("__ob")]
-                )
-            return df
-        except AnalysisException as exc:
-            # A table exists in the warehouse but isn't granted → it was
-            # never registered in this session's catalog. Surface that
-            # as the reference's plan-time denial rather than a
-            # not-found error (consumer_emr_on_eks_setup.sh:480-488).
-            # Match the *exact* unresolved identifier from the error
-            # (backtick-quoted), not a substring — `patientsss` must
-            # stay TABLE_OR_VIEW_NOT_FOUND, not become a denial.
-            unresolved = {
-                ident.split(".")[-1]
-                for ident in re.findall(r"`([^`]+)`", str(exc))
-            }
-            for name in self._known_tables():
-                if name in unresolved and name not in self._registered:
-                    # Exists in the warehouse but is not serveable for
-                    # this principal (ungranted, or its filter was
-                    # deleted) → plan-time denial, recorded in the
-                    # audit trail like every other authorization check.
-                    self._policy.audit_log.append(
-                        (self.principal, name, SELECT, "denied")
-                    )
-                    raise AccessDeniedException(self.principal, name) from exc
-            raise
+                df = df.drop("__don", *[c for c in df.columns if c.startswith("__ob")])
+        return df
 
     def describe(self, name: str) -> list[tuple[str, str]]:
         self._policy.authorize(self.principal, name, DESCRIBE)
@@ -1471,7 +1437,7 @@ class SecureSession:
             try:
                 f = self._policy.get_filter(grant.filter_name)
             except KeyError:
-                raise AccessDeniedException(self.principal, name, DESCRIBE) from None
+                raise self._deny(name, DESCRIBE) from None
             if f.allowed_columns is not None:
                 df = df.select(*f.allowed_columns)
         return [(fld.name, fld.dataType.simpleString()) for fld in df.schema.fields]

@@ -123,6 +123,13 @@ def _transform_column(f: PartitionField, dtype: str) -> F.Column:
     raise ValueError(f.kind)
 
 
+def _decoded(rel_paths) -> list[str]:
+    """Data-dir-relative paths cut from Spark's ``file_path`` URIs
+    (percent-encoded: a space in a partition value reads %20), decoded
+    to the on-disk spelling the snapshot log records and validates."""
+    return sorted(unquote(p) for p in rel_paths)
+
+
 class TableNotFoundError(Exception):
     pass
 
@@ -1317,7 +1324,7 @@ class Warehouse:
         return self._scan_live(meta, with_file=True)
 
     def _rel_file(self, meta: TableMeta, uri: str) -> str:
-        path = uri[len("file:"):] if uri.startswith("file:") else uri
+        path = unquote(uri[len("file:"):]) if uri.startswith("file:") else uri
         return os.path.relpath(path, os.path.abspath(self.data_dir(meta.name)))
 
     def _matched_stats(
@@ -1442,7 +1449,7 @@ class Warehouse:
             F.count(F.lit(1)).alias("n"),
             F.collect_set(self._rel_expr(F.col("__file_path"))).alias("refs"),
         ).collect()[0]  # scale-ok: 1-row commit-planning aggregate
-        n, refs = int(row["n"]), sorted(row["refs"])
+        n, refs = int(row["n"]), _decoded(row["refs"])
         if n == 0:
             return {"deleted_rows": 0, "delete_files": 0, "mode": "merge-on-read"}
         ddir = self.delete_dir(meta.name)
@@ -1504,7 +1511,7 @@ class Warehouse:
             F.count(F.lit(1)).alias("n"),
             F.collect_set(self._rel_expr(F.col("file_path"))).alias("refs"),
         ).collect()[0]  # scale-ok: 1-row commit-planning aggregate
-        n, refs = row["n"], sorted(row["refs"])
+        n, refs = row["n"], _decoded(row["refs"])
         if n == 0:
             return {"deleted_rows": 0, "delete_files": 0, "mode": "merge-on-read"}
         ddir = self.delete_dir(meta.name)
@@ -1692,7 +1699,7 @@ class Warehouse:
             F.count(F.lit(1)).alias("n"),
             F.collect_set(self._rel_expr(F.col("__pos_file"))).alias("refs"),
         ).collect()[0]  # scale-ok: 1-row commit-planning aggregate
-        n, refs = row["n"], sorted(row["refs"])
+        n, refs = row["n"], _decoded(row["refs"])
         if n == 0:
             return {"updated_rows": 0, "delete_files": 0, "mode": "merge-on-read"}
         updated = matched.select(
@@ -2192,7 +2199,7 @@ class Warehouse:
                 row = ddf.agg(
                     F.collect_set(self._rel_expr(F.col("file_path"))).alias("r")
                 ).collect()[0]  # scale-ok: 1-row commit-planning aggregate
-                refs = sorted(row["r"])
+                refs = _decoded(row["r"])
                 before_d = self._delete_files_on_disk(meta.name)
                 ddf.sortWithinPartitions("file_path", "pos").write.mode(
                     "append"
@@ -4196,8 +4203,14 @@ class Warehouse:
             live_df = self.spark.createDataFrame(
                 [(f,) for f in sorted(live)], "__live_rel string"
             )
+            # the live set holds on-disk paths; file_path is a URI, so
+            # decode it (a literal '+' stays '+': url_decode reads it as
+            # a space)
+            rel = F.url_decode(
+                F.regexp_replace(self._rel_expr(F.col("file_path")), r"\+", "%2B")
+            )
             kept = (
-                raw.withColumn("__rel", self._rel_expr(F.col("file_path")))
+                raw.withColumn("__rel", rel)
                 .join(
                     F.broadcast(live_df),
                     F.col("__rel") == F.col("__live_rel"),
@@ -4211,7 +4224,7 @@ class Warehouse:
                 F.count(F.lit(1)).alias("n"),
                 F.collect_set(self._rel_expr(F.col("file_path"))).alias("refs"),
             ).collect()[0]  # scale-ok: 1-row schema-probe aggregate
-            n, refs = int(row["n"]), sorted(row["refs"])
+            n, refs = int(row["n"]), _decoded(row["refs"])
             added: set[str] = set()
             if n > 0:
                 before = self._delete_files_on_disk(name)

@@ -327,6 +327,17 @@ def _sub_outside_strings(pattern: str, repl: str, text: str, flags: int = 0) -> 
     return "".join(out)
 
 
+def _parses_to_query_or_sugar(spark: SparkSession, text: str) -> bool:
+    """False when Spark parses ``text`` to something other than a
+    query (a write or command hiding behind a query-shaped prefix, e.g.
+    ``WITH … INSERT``). Text Spark cannot parse is sugar for the read
+    path, which refuses it there if it is not."""
+    from sample_emr_on_eks_fgac_iceberg_spark.policy import parse_statement
+
+    stmt = parse_statement(spark, text)
+    return stmt is None or stmt.is_query
+
+
 def _split_cte_insert(query: str) -> tuple[str, str | None, str] | None:
     """For ``WITH … INSERT INTO t [(cols)] SELECT …`` find the
     top-level (paren-depth-0, outside strings) INSERT INTO clause and
@@ -1495,16 +1506,13 @@ class SqlFrontend:
             # the body to spark.sql, which EXECUTES DDL/DML eagerly —
             # a `CREATE VIEW v AS INSERT INTO t …` body would run its
             # side effect at validation and then again on every read.
-            # Reject non-query shapes (textual allowlist + Spark's own
-            # parsed-plan write classifier for CTE-smuggled DML) before
-            # anything touches an executor (ADVICE r12).
-            from sample_emr_on_eks_fgac_iceberg_spark.policy import (
-                parsed_write_class,
-            )
-
+            # Reject non-query shapes (textual allowlist for bodies
+            # with sugar Spark cannot parse, Spark's own parse for
+            # CTE-smuggled DML) before anything touches an executor
+            # (ADVICE r12).
             if not re.match(
                 r"\s*(\(|(SELECT|WITH|VALUES|TABLE)\b)", body, re.I
-            ) or parsed_write_class(self.spark, body) is not None:
+            ) or not _parses_to_query_or_sugar(self.spark, body):
                 raise ValueError(
                     f"View body must be a query (SELECT/WITH/VALUES/"
                     f"TABLE), got: {body[:60]!r}"
@@ -1609,11 +1617,10 @@ class SqlFrontend:
         # a clear error instead of reaching the eagerly-executing read
         # fallthrough.
         if _CTE_START_RE.match(query):
-            from sample_emr_on_eks_fgac_iceberg_spark.policy import (
-                parsed_write_class,
-            )
+            from sample_emr_on_eks_fgac_iceberg_spark.policy import parse_statement
 
-            wcls = parsed_write_class(self.spark, query)
+            stmt = parse_statement(self.spark, query)
+            wcls = None if stmt is None or stmt.is_query else stmt.plan_class
             if wcls == "InsertIntoStatement":
                 split = _split_cte_insert(query)
                 if split is not None:
@@ -1973,16 +1980,14 @@ class SqlFrontend:
         surface the warehouse API doesn't pretend to have. A CTE prefix
         can hide DML (`WITH … INSERT INTO t SELECT …`, which Spark's
         sql() executes EAGERLY), so beyond the textual allowlist the
-        statement's parsed plan class is checked with the same shared
-        helper the consumer write guard uses
-        (policy.py::parsed_write_class)."""
+        statement's parse is checked with the consumer surface's parser
+        (policy.py::parse_statement)."""
         from sample_emr_on_eks_fgac_iceberg_spark.plans import explain_str
-        from sample_emr_on_eks_fgac_iceberg_spark.policy import parsed_write_class
 
         rest = rest.strip().rstrip(";")
-        if not re.match(r"\s*(\(|(SELECT|WITH|VALUES|TABLE)\b)", rest, re.I):
-            raise ValueError("EXPLAIN supports queries (SELECT/WITH/VALUES) only")
-        if parsed_write_class(self.spark, rest) is not None:
+        if not re.match(
+            r"\s*(\(|(SELECT|WITH|VALUES|TABLE)\b)", rest, re.I
+        ) or not _parses_to_query_or_sugar(self.spark, rest):
             raise ValueError("EXPLAIN supports queries (SELECT/WITH/VALUES) only")
         return self.spark.createDataFrame(
             [(explain_str(self._query(rest), mode),)], "plan string"

@@ -369,3 +369,24 @@ def test_positional_deletes_compact_and_expire(wh):
     wh.delete_from("px", "k = 5")
     wh.expire_snapshots("px", keep_last=1)
     assert sorted(x.k for x in wh.read_table("px").collect()) == [3, 4, 6, 7, 8, 9]
+
+
+def test_mor_deletes_on_partition_values_with_spaces(wh):
+    """Delete-file refs are cut from Spark's percent-encoded file URIs;
+    the commit check, the scan's delete scoping and the positional-
+    delete rewrite all compare them with the on-disk paths of the
+    snapshot log ("Los Angeles", not "Los%20Angeles")."""
+    wh.create_table("c", "k int, city string", partition_by=["city"])
+    wh.set_delete_mode("c", "merge-on-read")
+    wh.insert_values("c", [(1, "Los Angeles"), (2, "Los Angeles"), (3, "El Paso")])
+    wh.delete_from("c", "k = 1")  # positional: no identifier fields
+    assert _rows(wh.read_table("c")) == [(2, "Los Angeles"), (3, "El Paso")]
+    wh.rewrite_position_delete_files("c")
+    assert _rows(wh.read_table("c")) == [(2, "Los Angeles"), (3, "El Paso")]
+    # equality deletes record the data files holding the matched keys
+    wh.create_table("e", "k int, city string", partition_by=["city"])
+    wh.set_identifier_fields("e", ["k"])
+    wh.set_delete_mode("e", "merge-on-read")
+    wh.insert_values("e", [(1, "New York City"), (2, "Buffalo")])
+    wh.delete_from("e", "k = 1")
+    assert _rows(wh.read_table("e")) == [(2, "Buffalo")]

@@ -10,7 +10,17 @@ from sample_emr_on_eks_fgac_iceberg_spark.healthcare import (
     TEAM2,
     setup_healthcare,
 )
-from sample_emr_on_eks_fgac_iceberg_spark.policy import AccessDeniedException
+from sample_emr_on_eks_fgac_iceberg_spark import policy as policy_mod
+from sample_emr_on_eks_fgac_iceberg_spark.policy import (
+    ALTER,
+    DELETE,
+    DESCRIBE,
+    DROP,
+    INSERT,
+    SELECT,
+    AccessDeniedException,
+    parse_statement,
+)
 
 
 @pytest.fixture(scope="module")
@@ -161,3 +171,288 @@ def test_drop_table_removes_data_and_meta(engine, spark, tmp_path):
         pass
     wh.create_table("t_tmp", "a int", partition_by=[])
     assert wh.read_table("t_tmp").count() == 0
+
+
+# ---------------------------------------------------------------------------
+# Single-parse dispatch: SecureSession.sql decides every statement from one
+# policy.parse_statement record.
+
+
+@pytest.fixture(scope="module")
+def dispatch_engine(spark, tmp_path_factory):
+    """Healthcare lake plus a scratch table nobody is granted yet."""
+    eng = FgacEngine(spark, str(tmp_path_factory.mktemp("dispatch")))
+    setup_healthcare(eng)
+    eng.sql("CREATE TABLE scratch (x STRING)")
+    return eng
+
+
+def _recording(sess):
+    """Swap the trusted write delegate for a recorder: dispatch is what
+    is under test, not the frontend's execution of the statement."""
+    calls = []
+    sess._dml_executor = calls.append
+    return calls
+
+
+WRITE_DISPATCH = [
+    ("INSERT INTO scratch VALUES ('x')", "InsertIntoStatement", {INSERT}),
+    (
+        "INSERT OVERWRITE scratch SELECT x FROM scratch",
+        "InsertIntoStatement",
+        {INSERT, DELETE},
+    ),
+    (
+        "WITH c AS (SELECT 'y' AS x) INSERT INTO scratch SELECT * FROM c",
+        "InsertIntoStatement",
+        {INSERT},
+    ),
+    ("DELETE FROM scratch WHERE x = 'x'", "DeleteFromTable", {DELETE}),
+    ("TRUNCATE TABLE scratch", "TruncateTable", {DELETE}),
+    ("UPDATE scratch SET x = 'z'", "UpdateTable", {INSERT, DELETE}),
+    (
+        "MERGE INTO scratch t USING (SELECT 'q' AS x) s ON t.x = s.x "
+        "WHEN NOT MATCHED THEN INSERT *",
+        "MergeIntoTable",
+        {INSERT, DELETE},
+    ),
+    ("ALTER TABLE scratch ADD COLUMNS (y INT)", "AddColumns", {ALTER}),
+    ("ALTER TABLE scratch RENAME COLUMN x TO w", "RenameColumn", {ALTER}),
+    ("ALTER TABLE scratch SET TBLPROPERTIES ('k'='v')", "SetTableProperties", {ALTER}),
+    ("ANALYZE TABLE scratch COMPUTE STATISTICS", "AnalyzeTable", {ALTER}),
+    ("DROP TABLE scratch", "DropTable", {DROP}),
+]
+
+
+@pytest.mark.parametrize("stmt,plan_class,perms", WRITE_DISPATCH)
+def test_write_dispatch_by_plan_class(dispatch_engine, spark, stmt, plan_class, perms):
+    parsed = parse_statement(spark, stmt)
+    assert (parsed.plan_class, parsed.target, parsed.is_query) == (
+        plan_class, "scratch", False,
+    )
+    policy = dispatch_engine.policy
+    try:
+        # each required permission, withheld alone, denies
+        for missing in perms:
+            policy.grant("w", "scratch", {SELECT} | (perms - {missing}))
+            sess = dispatch_engine.session_for("w")
+            calls = _recording(sess)
+            with pytest.raises(AccessDeniedException, match=missing):
+                sess.sql(stmt)
+            assert calls == []
+        # all of them delegates the statement, once, verbatim
+        policy.grant("w", "scratch", {SELECT} | perms)
+        sess = dispatch_engine.session_for("w")
+        calls = _recording(sess)
+        sess.sql(stmt)
+        assert calls == [stmt]
+    finally:
+        policy.revoke("w", "scratch")
+
+
+@pytest.mark.parametrize(
+    "stmt,plan_class,target,is_query",
+    [
+        ("SELECT * FROM patients", "Project", None, True),
+        ("WITH c AS (SELECT 1) SELECT * FROM c", "Project", None, True),
+        ("TABLE claims", "UnresolvedRelation", None, True),
+        ("CREATE TABLE db.fresh (k INT)", "CreateTable", "db.fresh", False),
+        ("CREATE OR REPLACE TABLE fresh AS SELECT 1 AS k", "ReplaceTableAsSelect", "fresh", False),
+        ("CREATE VIEW v AS SELECT * FROM claims", "CreateView", "v", False),
+        ("DROP VIEW IF EXISTS v", "DropView", "v", False),
+        ("SHOW TABLES IN analytics", "ShowTables", "analytics", False),
+        ("DESCRIBE DATABASE analytics", "DescribeNamespace", "analytics", False),
+        ("DESCRIBE patients", "DescribeRelation", "patients", False),
+        ("CALL system.expire_snapshots(table => 'claims')", "Call", None, False),
+        ("FROM claims INSERT INTO scratch SELECT claim_id", "InsertIntoStatement", "scratch", False),
+        ("SELECT TRANSFORM(x) USING 'cat' FROM scratch", "ScriptTransformation", None, False),
+    ],
+)
+def test_parse_statement_record(spark, stmt, plan_class, target, is_query):
+    parsed = parse_statement(spark, stmt)
+    assert parsed.plan_class == plan_class
+    assert parsed.is_query is is_query
+    if target is not None:
+        assert parsed.target == target
+
+
+def test_parse_statement_relation_set(spark):
+    """Relations come from subqueries, CTE bodies and MERGE sources;
+    CTE names are reported separately, EXPLAIN is unwrapped."""
+    parsed = parse_statement(
+        spark,
+        "EXPLAIN EXTENDED WITH c AS (SELECT * FROM a WHERE k IN (SELECT k FROM b)) "
+        "SELECT * FROM c JOIN dev.db.t ON c.k = t.k",
+    )
+    assert parsed.explain == "extended" and parsed.is_query
+    assert set(parsed.relations) == {("a",), ("b",), ("c",), ("dev", "db", "t")}
+    assert parsed.cte_names == {"c"}
+    # a relation named by an expression cannot be authorized statically
+    assert parse_statement(spark, "SELECT * FROM IDENTIFIER('patients')") is None
+    assert parse_statement(spark, "OPTIMIZE claims") is None
+
+
+def test_parse_statement_once_per_sql_call(dispatch_engine, monkeypatch):
+    calls = []
+
+    def counting(spark, text):
+        calls.append(text)
+        return parse_statement(spark, text)
+
+    monkeypatch.setattr(policy_mod, "parse_statement", counting)
+    dispatch_engine.policy.grant("once", "scratch", {SELECT, DESCRIBE, INSERT})
+    sess = dispatch_engine.session_for("once")
+    _recording(sess)
+    for stmt in (
+        "SELECT * FROM scratch",
+        "EXPLAIN SELECT * FROM scratch",
+        "INSERT INTO scratch VALUES ('a')",
+        "DESCRIBE scratch",
+        "SELECT * FROM scratch QUALIFY row_number() OVER (ORDER BY x) = 1",
+    ):
+        before = len(calls)
+        sess.sql(stmt)
+        assert len(calls) == before + 1, stmt
+    dispatch_engine.policy.revoke("once", "scratch")
+
+
+@pytest.mark.parametrize(
+    "stmt,error",
+    [
+        ("SELEC * FROM claims", ValueError),
+        ("FROB claims", ValueError),
+        ("SET spark.sql.runSQLOnFiles=true", AccessDeniedException),
+        ("CREATE TEMPORARY VIEW tv AS SELECT * FROM claims", AccessDeniedException),
+        ("EXECUTE IMMEDIATE 'SELECT 1'", AccessDeniedException),
+        ("SELECT TRANSFORM(claim_id) USING 'cat' FROM claims", AccessDeniedException),
+    ],
+)
+def test_unsupported_statements_refused_without_executing(
+    dispatch_engine, monkeypatch, stmt, error
+):
+    """Neither Spark SQL the consumer surface supports nor the residual
+    grammar: refused before anything reaches the session's Spark or the
+    trusted frontend."""
+    sess = dispatch_engine.session_for(TEAM1)
+    calls = _recording(sess)
+    ran = []
+    monkeypatch.setattr(sess._spark, "sql", lambda *a, **k: ran.append(a))
+    with pytest.raises(error):
+        sess.sql(stmt)
+    assert ran == [] and calls == []
+    assert sess._spark.conf.get("spark.sql.runSQLOnFiles") == "false"
+
+
+def test_team2_denied_before_spark_runs(dispatch_engine, monkeypatch):
+    sess = dispatch_engine.session_for(TEAM2)
+    ran = []
+    monkeypatch.setattr(sess._spark, "sql", lambda *a, **k: ran.append(a))
+    with pytest.raises(AccessDeniedException):
+        sess.sql("SELECT * FROM patients")
+    assert ran == []
+
+
+def test_parse_plan_called_only_in_parse_statement():
+    """Static gate: the engine parses SQL with Spark in exactly one
+    place, so the policy layer and the frontend cannot disagree on what
+    a statement is."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(policy_mod.__file__).resolve().parent
+    tree = ast.parse((pkg / "policy.py").read_text())
+    fn = next(
+        n for n in tree.body
+        if isinstance(n, ast.FunctionDef) and n.name == "parse_statement"
+    )
+    sites = [
+        (py.relative_to(pkg).as_posix(), i)
+        for py in sorted(pkg.rglob("*.py"))
+        for i, line in enumerate(py.read_text().splitlines(), 1)
+        if "parsePlan(" in line
+    ]
+    assert sites and all(
+        rel == "policy.py" and fn.lineno <= i <= fn.end_lineno for rel, i in sites
+    ), f"parsePlan( outside policy.parse_statement: {sites}"
+
+
+# ---------------------------------------------------------------------------
+# Audit: every consumer denial leaves exactly one `denied` record.
+
+
+@pytest.fixture()
+def audit_engine(spark, tmp_path):
+    eng = FgacEngine(spark, str(tmp_path / "audit"))
+    setup_healthcare(eng)
+    eng.sql("CREATE TABLE scratch (x STRING)")
+    eng.policy.grant("mallory", "scratch", {SELECT, INSERT})
+    return eng
+
+
+def _denied_rows(eng):
+    return eng.sql(
+        "SELECT count(*) AS n FROM system.audit_log WHERE decision = 'denied'"
+    ).collect()[0].n
+
+
+DENY_PATHS = [
+    pytest.param(TEAM2, "SELECT * FROM patients", id="read-fence"),
+    pytest.param(TEAM2, "SELECT * FROM dev.consumer_healthcare_db.rl_patients", id="3-part-link"),
+    pytest.param(TEAM2, "SELECT * FROM patients VERSION AS OF 1", id="time-travel"),
+    pytest.param(TEAM2, "SELECT * FROM patients.snapshots", id="metadata-table"),
+    pytest.param(TEAM2, "EXPLAIN SELECT * FROM patients", id="explain"),
+    pytest.param(
+        TEAM2,
+        "SELECT * FROM claims c ASOF JOIN patients p "
+        "ON c.patient_id = p.patient_id AND c.claim_date >= p.date_of_birth",
+        id="asof-resolver",
+    ),
+    pytest.param("mallory", "INSERT INTO scratch SELECT * FROM parquet.`/tmp`", id="file-relation"),
+    pytest.param("mallory", "INSERT INTO scratch SELECT patient_name FROM patients", id="write-source"),
+    pytest.param(TEAM1, "INSERT INTO claims SELECT * FROM claims", id="write-permission"),
+    pytest.param(
+        "mallory", "WITH c AS (SELECT 'a' AS x) DELETE FROM scratch WHERE x IN (SELECT x FROM c)",
+        id="cte-wrapped-write",
+    ),
+    pytest.param("mallory", "CALL system.expire_snapshots(table => 'scratch')", id="call"),
+    pytest.param("mallory", "CREATE OR REPLACE TABLE scratch (x STRING)", id="create-or-replace"),
+    pytest.param("mallory", "CREATE TABLE fresh (k INT)", id="create-table"),
+    pytest.param("mallory", "SET spark.sql.runSQLOnFiles=true", id="unsupported-statement"),
+    pytest.param("mallory", "OPTIMIZE claims REWRITE DATA USING BIN_PACK", id="residual-grammar"),
+    pytest.param("mallory", "DESCRIBE DATABASE default", id="database-describe"),
+]
+
+
+@pytest.mark.parametrize("principal,stmt", DENY_PATHS)
+def test_each_consumer_denial_audited_once(audit_engine, principal, stmt):
+    sess = audit_engine.session_for(principal)
+    before = _denied_rows(audit_engine)
+    with pytest.raises(AccessDeniedException):
+        out = sess.sql(stmt)
+        if out is not None:
+            out.collect()
+    assert _denied_rows(audit_engine) == before + 1
+
+
+def test_filtered_source_and_permanent_table_denials_audited_once(
+    audit_engine, spark, tmp_path
+):
+    """The two fences that deny AFTER a granted check: a data-cells-
+    filtered grant used as a write source, and a permanent catalog table
+    (what SPJ mirrors are) named in a read."""
+    audit_engine.policy.grant(TEAM1, "scratch", {SELECT, INSERT})
+    team1 = audit_engine.session_for(TEAM1)
+    before = _denied_rows(audit_engine)
+    with pytest.raises(AccessDeniedException, match="unfiltered"):
+        team1.sql("INSERT INTO scratch SELECT patient_name FROM patients")
+    assert _denied_rows(audit_engine) == before + 1
+    spark.sql(
+        f"CREATE TABLE perm_vault (a INT) USING parquet LOCATION '{tmp_path}/perm'"
+    )
+    try:
+        before = _denied_rows(audit_engine)
+        with pytest.raises(AccessDeniedException):
+            team1.sql("SELECT * FROM perm_vault")
+        assert _denied_rows(audit_engine) == before + 1
+    finally:
+        spark.sql("DROP TABLE perm_vault")

@@ -23,18 +23,6 @@ def test_wmedian_inplan_gate_matches_driver_shape(spark, sf_dir):
     assert [r.asDict() for r in drv] == [r.asDict() for r in inp]
 
 
-def test_psi_inplan_gate_matches_literal_shape(spark, sf_dir):
-    lit = QUERIES["orders_value_psi_yearly"](spark, sf_dir).collect()
-    spark.conf.set("spark_graft.inplan_order_stats", "true")
-    try:
-        inp = QUERIES["orders_value_psi_yearly"](spark, sf_dir).collect()
-    finally:
-        spark.conf.unset("spark_graft.inplan_order_stats")
-    assert sorted(r.asDict().items() for r in lit) == sorted(
-        r.asDict().items() for r in inp
-    )
-
-
 def _write_lineitem(tmp_path, rows):
     d = tmp_path / "laspeyres_sf"
     d.mkdir()

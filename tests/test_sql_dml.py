@@ -287,3 +287,36 @@ def test_dml_subqueries_with_database_qualified_tables(engine):
     assert rows == [(2, 20)]
     engine.sql("UPDATE qdb.t SET v = (SELECT max(k) FROM qdb.s) WHERE k = 2")
     assert engine.sql("SELECT v FROM qdb.t").collect()[0].v == 3
+
+
+def test_cow_dml_on_partition_values_with_spaces(spark, tmp_path):
+    """Copy-on-write UPDATE / DELETE / MERGE on the healthcare patients
+    table, partitioned by city — "Los Angeles" and "New York City" are
+    directories whose names Spark's file URIs percent-encode. The
+    commit validates the files it removes against the live set, so
+    both must use one spelling (a mismatch raised CommitConflictError).
+    """
+    from sample_emr_on_eks_fgac_iceberg_spark.healthcare import (
+        PATIENTS_ROWS,
+        setup_healthcare,
+    )
+
+    e = FgacEngine(spark, str(tmp_path / "hc"))
+    setup_healthcare(e)
+    e.sql("UPDATE patients SET gender = 'X' WHERE city = 'Los Angeles'")
+    e.sql("DELETE FROM patients WHERE city = 'New York City'")
+    e.sql(
+        "MERGE INTO patients t USING (SELECT 1001 AS pid, 'San Antonio' AS c) s "
+        "ON t.patient_id = s.pid WHEN MATCHED THEN UPDATE SET city = s.c"
+    )
+    want = {
+        r[0]: (("X" if r[4] == "Los Angeles" else r[3]), r[4])
+        for r in PATIENTS_ROWS
+        if r[4] != "New York City"
+    }
+    want[1001] = ("X", "San Antonio")
+    got = {
+        r.patient_id: (r.gender, r.city)
+        for r in e.sql("SELECT patient_id, gender, city FROM patients").collect()
+    }
+    assert got == want
