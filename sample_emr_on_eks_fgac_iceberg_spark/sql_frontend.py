@@ -338,6 +338,20 @@ def _parses_to_query_or_sugar(spark: SparkSession, text: str) -> bool:
     return stmt is None or stmt.is_query
 
 
+def insert_target(query: str) -> str | None:
+    """The table this frontend's INSERT dispatch writes for ``query``,
+    or None when it has no handler for the spelling (its fallback would
+    run the statement eagerly on ``spark.sql``)."""
+    if _CTE_START_RE.match(query):
+        split = _split_cte_insert(query)
+        return split[0] if split else None
+    for shape in (_INSERT_RE, _INSERT_SELECT_RE, _INSERT_OVERWRITE_RE):
+        m = shape.match(query)
+        if m:
+            return m.group(1)
+    return None
+
+
 def _split_cte_insert(query: str) -> tuple[str, str | None, str] | None:
     """For ``WITH … INSERT INTO t [(cols)] SELECT …`` find the
     top-level (paren-depth-0, outside strings) INSERT INTO clause and

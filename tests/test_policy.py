@@ -266,6 +266,15 @@ def test_write_dispatch_by_plan_class(dispatch_engine, spark, stmt, plan_class, 
         ("CALL system.expire_snapshots(table => 'claims')", "Call", None, False),
         ("FROM claims INSERT INTO scratch SELECT claim_id", "InsertIntoStatement", "scratch", False),
         ("SELECT TRANSFORM(x) USING 'cat' FROM scratch", "ScriptTransformation", None, False),
+        # SQL scripts: the statements inside never make the script a query
+        ("BEGIN SET spark.sql.runSQLOnFiles=true; END", "CompoundBody", None, False),
+        ("BEGIN SELECT 1; END", "CompoundBody", None, False),
+        # IDENTIFIER(…) on top builds the statement, not a relation
+        ("INSERT INTO IDENTIFIER('scratch') SELECT 'x'", "PlanWithUnresolvedIdentifier", None, False),
+        (
+            "EXPLAIN WITH c AS (SELECT 1 x) INSERT INTO t SELECT * FROM IDENTIFIER('c')",
+            "InsertIntoStatement", "t", False,
+        ),
     ],
 )
 def test_parse_statement_record(spark, stmt, plan_class, target, is_query):
@@ -288,8 +297,34 @@ def test_parse_statement_relation_set(spark):
     assert set(parsed.relations) == {("a",), ("b",), ("c",), ("dev", "db", "t")}
     assert parsed.cte_names == {"c"}
     # a relation named by an expression cannot be authorized statically
-    assert parse_statement(spark, "SELECT * FROM IDENTIFIER('patients')") is None
+    parsed = parse_statement(spark, "SELECT * FROM IDENTIFIER('patients')")
+    assert parsed.is_query and not parsed.relations_complete
     assert parse_statement(spark, "OPTIMIZE claims") is None
+
+
+def test_parse_statement_walk_bound_fails_closed(spark, monkeypatch):
+    """A plan the walk does not finish is neither a query nor a
+    complete relation set; its top class is still reported."""
+    monkeypatch.setattr(policy_mod, "_MAX_PLAN_NODES", 3)
+    parsed = parse_statement(spark, "SELECT * FROM a JOIN b JOIN c JOIN d")
+    assert parsed.plan_class == "Project"
+    assert not parsed.is_query and not parsed.relations_complete
+
+
+@pytest.mark.parametrize(
+    "stmt,flags",
+    [
+        ("INSERT OVERWRITE scratch SELECT 'x'", {"overwrite": True}),
+        ("INSERT INTO scratch SELECT 'x'", {"overwrite": False}),
+        ("DROP VIEW IF EXISTS v", {"if_exists": True}),
+        ("SHOW TABLES IN analytics LIKE 'p*'", {"pattern": True}),
+        ("CREATE OR REPLACE VIEW v AS SELECT x FROM scratch", {"replace": True}),
+        ("CREATE VIEW v AS SELECT 1", {"replace": False}),
+    ],
+)
+def test_parse_statement_clause_flags(spark, stmt, flags):
+    parsed = parse_statement(spark, stmt)
+    assert {k: getattr(parsed, k) for k in flags} == flags
 
 
 def test_parse_statement_once_per_sql_call(dispatch_engine, monkeypatch):
@@ -325,6 +360,14 @@ def test_parse_statement_once_per_sql_call(dispatch_engine, monkeypatch):
         ("CREATE TEMPORARY VIEW tv AS SELECT * FROM claims", AccessDeniedException),
         ("EXECUTE IMMEDIATE 'SELECT 1'", AccessDeniedException),
         ("SELECT TRANSFORM(claim_id) USING 'cat' FROM claims", AccessDeniedException),
+        ("BEGIN SET spark.sql.runSQLOnFiles=true; END", AccessDeniedException),
+        (
+            "BEGIN EXECUTE IMMEDIATE 'SET spark.sql.runSQLOnFiles=true'; SELECT 1; END",
+            AccessDeniedException,
+        ),
+        ("SELECT * FROM IDENTIFIER('claims')", ValueError),
+        ("CREATE VIEW cv (a) AS SELECT claim_id FROM claims", ValueError),
+        ("DROP TABLE IDENTIFIER('claims')", ValueError),
     ],
 )
 def test_unsupported_statements_refused_without_executing(
@@ -341,6 +384,39 @@ def test_unsupported_statements_refused_without_executing(
         sess.sql(stmt)
     assert ran == [] and calls == []
     assert sess._spark.conf.get("spark.sql.runSQLOnFiles") == "false"
+
+
+@pytest.mark.parametrize(
+    "stmt",
+    [
+        "FROM claims INSERT INTO scratch SELECT claim_id",
+        "WITH c AS (SELECT 1) FROM claims INSERT INTO scratch SELECT claim_id "
+        "INSERT INTO scratch SELECT patient_id",
+        "INSERT INTO TABLE scratch VALUES ('x')",
+        "INSERT INTO scratch BY NAME SELECT 'x' AS x",
+        "INSERT INTO `scratch` VALUES ('x')",
+    ],
+)
+def test_insert_forms_the_frontend_cannot_dispatch_deny(dispatch_engine, stmt):
+    """Every grant held (INSERT on the target, unfiltered SELECT on the
+    source), yet the spelling has no handler on the trusted frontend,
+    whose fallback would run it eagerly: denied, never delegated."""
+    policy = dispatch_engine.policy
+    policy.grant("h", "scratch", {SELECT, INSERT})
+    policy.grant("h", "claims", {SELECT})
+    try:
+        sess = dispatch_engine.session_for("h")
+        calls = _recording(sess)
+        with pytest.raises(AccessDeniedException):
+            sess.sql(stmt)
+        assert calls == []
+        # the spellings the frontend does dispatch still delegate
+        sess.sql("INSERT INTO scratch SELECT claim_id FROM claims")
+        sess.sql("WITH c AS (SELECT 'y' AS x) FROM c INSERT INTO scratch SELECT x")
+        assert len(calls) == 2
+    finally:
+        policy.revoke("h", "scratch")
+        policy.revoke("h", "claims")
 
 
 def test_team2_denied_before_spark_runs(dispatch_engine, monkeypatch):
@@ -414,6 +490,7 @@ DENY_PATHS = [
         "mallory", "WITH c AS (SELECT 'a' AS x) DELETE FROM scratch WHERE x IN (SELECT x FROM c)",
         id="cte-wrapped-write",
     ),
+    pytest.param("mallory", "FROM scratch INSERT INTO scratch SELECT x", id="hive-insert"),
     pytest.param("mallory", "CALL system.expire_snapshots(table => 'scratch')", id="call"),
     pytest.param("mallory", "CREATE OR REPLACE TABLE scratch (x STRING)", id="create-or-replace"),
     pytest.param("mallory", "CREATE TABLE fresh (k INT)", id="create-table"),

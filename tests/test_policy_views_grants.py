@@ -384,6 +384,15 @@ def test_producer_explain_cte_dml_rejected_without_executing(engine):
             "EXPLAIN WITH x AS (SELECT * FROM claims) "
             "INSERT INTO claims SELECT * FROM x"
         )
+    # a relation named by IDENTIFIER(…) does not hide the INSERT
+    hidden = (
+        "WITH x AS (SELECT * FROM claims) "
+        "INSERT INTO claims SELECT * FROM IDENTIFIER('x')"
+    )
+    with pytest.raises(ValueError, match="queries"):
+        engine.sql("EXPLAIN " + hidden)
+    with pytest.raises(ValueError, match="View body must be a query"):
+        engine.sql("CREATE VIEW hidden_insert AS " + hidden)
     after = engine.sql("SELECT COUNT(*) AS n FROM claims").collect()[0].n
     assert before == after
     plan = engine.sql("EXPLAIN (SELECT 1 AS one)").collect()
