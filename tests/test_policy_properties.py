@@ -174,7 +174,7 @@ def test_masked_scan_equals_manual_mask(engine, states, masked):
 
 # ------------------------------------------------ write-source authorizer
 # The plan-based write authorizer (policy.py::_authorize_write_sources,
-# the py4j walk in _parsed_relation_idents) is the security keystone of
+# the relation set from policy.py::parse_statement) is the security keystone of
 # the delegated-DML path. Property: for ARBITRARY generated statements
 # mixing CTEs, IN/scalar subqueries in WHERE/SET/ON, nested CTE chains
 # and quoted identifiers, a statement referencing any ungranted base
